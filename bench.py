@@ -48,24 +48,37 @@ BENCH_MODELS = ["linear", "decision_tree", "random_forest"]
 STREAM_ISOLATED_PREFIXES = ("ts_stream", "rows_stream")
 
 
-def _cpu_jiffies() -> tuple[int, int] | None:
-    """(steal, busy) jiffies from /proc/stat — see _env_fingerprint.
+def _cpu_jiffies(stat_path: str = "/proc/stat") -> tuple[int, int] | None:
+    """(steal, busy) jiffies from the aggregate cpu line of /proc/stat —
+    see _env_fingerprint.
 
     busy excludes idle and iowait (r13, ADVICE r12): steal only competes
     with jiffies the guest actually wanted to run, so on a mostly-idle
     32-core box dividing by ALL jiffies diluted a fully-stolen busy core
     to ~3% — exactly the episodic-inflation signal the stamp exists to
-    attribute. steal_pct is now steal / (busy work), and the raw deltas
-    are recorded alongside so any ratio can be recomputed."""
+    attribute. busy also leaves out guest and guest_nice: the kernel
+    already counts them inside user and nice, so summing every field
+    counted guest time twice. steal_pct is steal / (busy work), and the
+    raw deltas are recorded alongside so any ratio can be recomputed."""
     try:
-        with open("/proc/stat") as fh:
+        with open(stat_path) as fh:
             parts = fh.readline().split()
         vals = [int(v) for v in parts[1:]]
         steal = vals[7] if len(vals) > 7 else 0
         idle_io = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return steal, sum(vals) - idle_io
+        return steal, sum(vals[:8]) - idle_io
     except (OSError, ValueError, IndexError):
         return None
+
+
+def _steal_pct(start: tuple[int, int] | None,
+               end: tuple[int, int] | None) -> float | None:
+    """Steal as a percent of busy jiffies between two _cpu_jiffies reads."""
+    if not start or not end:
+        return None
+    dsteal = end[0] - start[0]
+    dbusy = end[1] - start[1]
+    return round(100.0 * dsteal / max(dbusy, 1), 2)
 
 
 def _env_fingerprint() -> dict:
@@ -241,11 +254,9 @@ def main() -> None:
 
     jiffies_end = _cpu_jiffies()
     if jiffies_start and jiffies_end:
-        dsteal = jiffies_end[0] - jiffies_start[0]
-        dbusy = jiffies_end[1] - jiffies_start[1]
-        env["steal_pct"] = round(100.0 * dsteal / max(dbusy, 1), 2)
-        env["steal_jiffies"] = dsteal
-        env["busy_jiffies"] = dbusy
+        env["steal_pct"] = _steal_pct(jiffies_start, jiffies_end)
+        env["steal_jiffies"] = jiffies_end[0] - jiffies_start[0]
+        env["busy_jiffies"] = jiffies_end[1] - jiffies_start[1]
 
     total = round(sum(timings.values()), 3)
     detail = {

@@ -27,6 +27,21 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+# The canonical longitudinal series (r9 verdict "what's wrong" #2): the
+# driver's same-JVM BENCH_r{N} totals are ~55% environment noise, so the
+# round-over-round performance claim is carried by the fixed HEADLINE set,
+# re-measured fresh-JVM at every round close into BENCH_ISOLATED_r{N}.json
+# with an env fingerprint. The set, the model-fit block and the
+# environment/steal stamps are bench.py's: one copy, so the two records
+# stay comparable.
+from bench import (  # noqa: E402
+    HEADLINE,
+    _cpu_jiffies,
+    _env_fingerprint,
+    _steal_pct,
+    time_models,
+)
+
 
 def child(name: str, sf_dir: str, reps: int, warmup: bool = True) -> None:
     from usedcars_bigdata_spark.plans import QUERIES
@@ -38,17 +53,8 @@ def child(name: str, sf_dir: str, reps: int, warmup: bool = True) -> None:
     # only the three bench.py MODEL FITS — registry entries may also be
     # ml_-prefixed (ml_indexed_feature_hist) and run through QUERIES
     if name in ("ml_linear", "ml_decision_tree", "ml_random_forest"):
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "bench", os.path.join(HERE, "bench.py")
-        )
-        bench = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(bench)
-        model = name[len("ml_"):]
-
         def run_once() -> float:
-            return bench.time_models(spark, sf_dir)[f"ml_{model}"]
+            return time_models(spark, sf_dir)[name]
 
         if warmup:
             run_once()  # warmup, unrecorded
@@ -65,20 +71,6 @@ def child(name: str, sf_dir: str, reps: int, warmup: bool = True) -> None:
         times.append(round(time.time() - t0, 3))
     print(json.dumps({"query": name, "times": times}))
 
-
-# The canonical longitudinal series (r9 verdict "what's wrong" #2): the
-# driver's same-JVM BENCH_r{N} totals are ~55% environment noise, so the
-# round-over-round performance claim is carried by THIS fixed headline
-# set, re-measured fresh-JVM at every round close into
-# BENCH_ISOLATED_r{N}.json (same schema as r9's) with an env fingerprint.
-HEADLINE = [
-    "ref_q1_avg_price_by_priority",
-    "ref_q2_median_value_by_type",
-    "ref_q3_pct_of_total",
-    "ml_linear",
-    "ml_decision_tree",
-    "ml_random_forest",
-]
 
 # Same-JVM movers under adjudication (r10 verdict #4): any entry whose
 # BENCH_DETAIL delta exceeded 2x net of the round's median inflation is
@@ -108,53 +100,6 @@ MOVERS = [
 # runs) dominates their wall, not JIT, and a warmup doubles the cost for
 # no steady-state benefit.
 NO_WARMUP_PREFIXES = ("ts_stream", "rows_stream")
-
-
-def _cpu_jiffies() -> tuple[int, int] | None:
-    """(steal, busy) jiffies from /proc/stat; busy excludes idle+iowait so
-    steal is measured against work the guest wanted to run (r13 — same
-    semantics as bench.py; the r12 isolated records could not prove the
-    uniform headline drift was host steal because this recorder did not
-    stamp it)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        idle_io = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return steal, sum(vals) - idle_io
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_pct(start: tuple[int, int] | None,
-               end: tuple[int, int] | None) -> float | None:
-    if not start or not end:
-        return None
-    dsteal = end[0] - start[0]
-    dbusy = end[1] - start[1]
-    return round(100.0 * dsteal / max(dbusy, 1), 2)
-
-
-def _env_fingerprint() -> dict:
-    try:
-        load1, load5, _ = os.getloadavg()
-    except OSError:
-        load1 = load5 = -1.0
-    n_java = 0
-    try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as fh:
-                    if fh.read().strip() == "java":
-                        n_java += 1
-            except OSError:
-                continue
-    except OSError:
-        n_java = -1
-    return {"load1": round(load1, 2), "load5": round(load5, 2), "n_java": n_java}
 
 
 def main() -> int:

@@ -9,7 +9,9 @@ slots enter the RE-VERIFICATION rotation (r11 VERDICT item 6): they are
 filled with the OLDEST driver-verified oracle-backed rows, keyed by
 (last-verified round, registry order), so no entry's official row ages
 indefinitely. This script derives the ground truth from the
-CORRECTNESS_r*.json records and checks the CURRENT window against it —
+CORRECTNESS_r*.json records of the rounds before CONTRACT_WINDOW_ROUND
+(plans/__init__.py: the round the window was queued for) and checks the
+CURRENT window against it —
 a mis-queued entry (duplicate slot, rows-only slot, a backlog entry
 left out, or a fresher-than-necessary re-verify fill) would waste an
 official verification slot silently.
@@ -50,11 +52,15 @@ DRIVER_WINDOW = 50
 N_PINS = 12
 
 
-def load_last_verified() -> dict[str, int]:
-    """name -> most recent round with an official driver row."""
+def load_last_verified(before_round: int | None = None) -> dict[str, int]:
+    """name -> most recent round with an official driver row, counting only
+    rounds before ``before_round`` when given (the ledger as it stood when
+    that round's window was queued)."""
     last: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(HERE, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
+        if before_round is not None and rnd >= before_round:
+            continue
         with open(path) as fh:
             for name in json.load(fh):
                 last[name] = max(last.get(name, 0), rnd)
@@ -67,13 +73,15 @@ def main() -> int:
                     help="suggested next-round rotate-in count")
     args = ap.parse_args()
 
-    from usedcars_bigdata_spark.plans import ORACLES, QUERIES
+    from usedcars_bigdata_spark.plans import CONTRACT_WINDOW_ROUND, ORACLES, QUERIES
 
     keys = list(QUERIES)
     order = {k: i for i, k in enumerate(keys)}
     window = keys[:DRIVER_WINDOW]
-    last = load_last_verified()
-    n_rounds = max(last.values(), default=0)
+    # The window is checked against the ledger of the rounds before the one
+    # it was queued for; later rounds' rows feed only the suggestion below.
+    last = load_last_verified(before_round=CONTRACT_WINDOW_ROUND)
+    n_rounds = CONTRACT_WINDOW_ROUND - 1
 
     failures: list[str] = []
     pins = window[:N_PINS]
@@ -123,11 +131,12 @@ def main() -> int:
           f"never-verified oracle-backed backlog: "
           f"{len([k for k in backlog if k not in set(window)])}")
 
-    # Staleness table: where the official rows would stand after this sweep.
-    post = dict(last)
+    # Staleness table: where the official rows would stand after this sweep
+    # (and after any later rounds already on record).
+    post = load_last_verified()
     for n in window:
         if n in ORACLES:
-            post[n] = n_rounds + 1
+            post[n] = max(post.get(n, 0), CONTRACT_WINDOW_ROUND)
     by_round: dict[int, int] = {}
     for k in oracle_backed:
         by_round[post.get(k, 0)] = by_round.get(post.get(k, 0), 0) + 1

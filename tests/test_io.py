@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from usedcars_bigdata_spark.schemas import VEHICLES_RAW
+from usedcars_bigdata_spark.schemas import TABLE_NAMES, TESTDATA, VEHICLES_RAW
 from usedcars_bigdata_spark.sources import (
     load_table,
     read_csv,
@@ -251,3 +251,135 @@ def test_messy_csv_roundtrip_embedded_newlines_and_quotes(spark, tmp_path):
     got = {r["id"]: (r["description"], r["price"]) for r in back.collect()}
     want = {i: (d, p) for i, d, p in rows}
     assert got == want  # byte-lossless including the embedded newline
+
+
+# -- parquet schema memo (sources.io.parquet_schema) --------------------------
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted through the status
+    tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "schema memo test")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred_and_normalized(spark, path, want):
+    """The schema-inferring read plus load_table's ts normalization, built
+    independently of the memo."""
+    from pyspark.sql import types as T
+
+    df = spark.read.parquet(path)
+    for field in want.fields:
+        if not isinstance(field.dataType, T.TimestampType):
+            continue
+        actual = df.schema[field.name].dataType
+        if isinstance(actual, T.LongType):
+            df = df.withColumn(
+                field.name, F.timestamp_micros(F.expr(f"{field.name} div 1000"))
+            )
+        elif isinstance(actual, T.TimestampNTZType):
+            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    return df.schema
+
+
+@pytest.mark.parametrize("table", TABLE_NAMES)
+def test_load_table_schema_matches_inferring_read(spark, sf_dir, table):
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    want = _inferred_and_normalized(
+        spark, f"{sf_dir}/{table}.parquet", TESTDATA[table]
+    )
+    got = load_table(spark, sf_dir, table).schema
+    assert [(f.name, f.dataType, f.nullable) for f in got.fields] == [
+        (f.name, f.dataType, f.nullable) for f in want.fields
+    ]
+
+
+def test_second_load_table_starts_no_job(spark, sf_dir):
+    load_table(spark, sf_dir, "orders")
+    df, jobs = _jobs_started(spark, lambda: load_table(spark, sf_dir, "orders"))
+    assert jobs == 0
+    assert df.count() > 0
+
+
+def test_rewritten_file_is_probed_again(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32()),
+                  "r_name": ["AFRICA", "AMERICA"]}),
+        path,
+    )
+    first, jobs = _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs >= 1 and first.columns == ["r_regionkey", "r_name"]
+    _, jobs = _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs == 0
+
+    st = os.stat(path)
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32()),
+                  "r_name": ["AFRICA", "AMERICA"],
+                  "r_extra": [1.5, 2.5]}),
+        path,
+    )
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second, jobs = _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs >= 1
+    assert second.columns == ["r_regionkey", "r_name", "r_extra"]
+    assert sorted(r["r_extra"] for r in second.collect()) == [1.5, 2.5]
+
+
+def test_memoized_nanos_layout_reads_micros(spark, tmp_path):
+    """INT64 TIMESTAMP(NANOS) files: the memoized physical schema carries
+    ts as long, and the explicit-schema read still truncates to micros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    micros = [1_704_067_798_778_549, 1_704_164_645_000_006]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([0, 1], pa.int64()),
+            "ts": pa.array([us * 1000 + 999 for us in micros], pa.timestamp("ns")),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["click", "view"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    for _ in range(2):  # the first call infers, the second hits the memo
+        ev = load_table(spark, str(tmp_path), "events")
+        assert ev.schema["ts"].dataType.simpleString() == "timestamp"
+        got = ev.orderBy("event_id").select(F.unix_micros("ts")).collect()
+        assert [r[0] for r in got] == micros
+
+
+def test_self_join_of_loaded_table_resolves(spark, sf_dir, duck):
+    from tests.conftest import assert_df_matches_oracle
+
+    a = load_table(spark, sf_dir, "nation").alias("a")
+    b = load_table(spark, sf_dir, "nation").alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.n_regionkey") == F.col("b.n_regionkey"))
+        & (F.col("a.n_nationkey") < F.col("b.n_nationkey")),
+    ).select(F.col("a.n_name").alias("a_name"), F.col("b.n_name").alias("b_name"))
+    assert_df_matches_oracle(
+        pairs, duck,
+        "SELECT a.n_name AS a_name, b.n_name AS b_name FROM nation a "
+        "JOIN nation b ON a.n_regionkey = b.n_regionkey "
+        "AND a.n_nationkey < b.n_nationkey",
+    )

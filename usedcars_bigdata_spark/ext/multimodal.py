@@ -297,15 +297,6 @@ def image_near_dupes(
     return simhash_near_pairs(fps, "media_id", max_hamming=max_hamming)
 
 
-def decode_audio(payload: bytes):  # pragma: no cover - intentional stub
-    """Real decode (soundfile/librosa/ffmpeg) — unavailable in this
-    container; the plumbing below runs on the deterministic stand-in."""
-    raise NotImplementedError(
-        "audio codecs not installed; audio_frame_features uses the "
-        "deterministic PCM stand-in"
-    )
-
-
 def audio_frame_features(
     media: DataFrame,
     frame_len: int = 256,

@@ -110,19 +110,6 @@ def _valid_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     )
 
 
-def _signature(vec_col: str, planes: np.ndarray) -> "F.Column":
-    """b-bit sign signature of one LSH table as a long (native column-
-    expression form: one fold per plane — kept for parity/debugging;
-    ``_signatures_udf`` is the vectorized production path)."""
-    bits, dim = planes.shape
-    sig = F.lit(0).cast("long")
-    for b in range(bits):
-        plane = F.array(*[F.lit(float(v)) for v in planes[b]])
-        d = dot(vec_col, plane)
-        sig = sig + F.shiftleft(F.when(d >= 0, F.lit(1).cast("long")).otherwise(0), b)
-    return sig
-
-
 def _signatures_udf(planes: np.ndarray):
     """Arrow-batched pandas UDF computing ALL table signatures per vector
     in one BLAS matmul: (batch × dim) @ (dim × tables·bits) → signs →
@@ -1205,26 +1192,6 @@ def ivfpq_topk(
             F.round("cos", ndigits).alias("cosine"),
         )
     )
-
-
-def dot_pandas(va: str, vb: str):
-    """Arrow-vectorized pair dot product (pandas UDF, one einsum per
-    batch) — the fast path for PAIR-SCAN scoring where the interpreted
-    zip_with/aggregate fold costs ~80us per pair (measured on the
-    embedding-outlier 262k-pair scan: 22s HOF vs <1s vectorized).
-    Summation order differs from the sequential fold at the ~1-ulp
-    level; callers that hash-compare against an oracle keep a rounding
-    margin (the entries round to 6 digits on ~0.1-magnitude cosines,
-    ~9 orders above the drift) and break ranking ties by id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-    return pair_dot(F.col(va), F.col(vb))
 
 
 def max_cosine_vs_matrix(ref_ids: np.ndarray, ref_mat: np.ndarray):

@@ -45,10 +45,3 @@ def sq_dist(a: str | Column, b: str | Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def l2_normalize(a: str | Column) -> Column:
-    """Scale an array column to unit L2 norm (Normalizer(p=2) equivalent,
-    recomendation-system.py:161-164, without the ML vector detour)."""
-    n = l2_norm(a)
-    return F.transform(_c(a), lambda x: x.cast("double") / n)

@@ -31,12 +31,6 @@ def grouped_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> D
     return df.groupBy(*keys).agg(*aggs)
 
 
-def global_scalar(df: DataFrame, agg: Column):
-    """A4: global aggregate collected to a driver scalar (parity form;
-    data-understanding.py:151,229). Use sparingly — driver round-trip."""
-    return df.agg(agg).collect()[0][0]
-
-
 def median_exact(col: str) -> Column:
     """Exact interpolated median (matches DuckDB quantile_cont)."""
     return F.expr(f"percentile({col}, 0.5)")

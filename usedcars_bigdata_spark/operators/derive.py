@@ -53,13 +53,6 @@ def categorize_by_keywords(
     return when_chain(cases, default)
 
 
-def add_age(df: DataFrame, date_col: str, year_col: str | int, alias: str = "age") -> DataFrame:
-    """Age derivation: year(date) − year (data-viz&cleaning.py:254-257).
-    ``year_col`` may be a column name or a literal reference year."""
-    base = F.col(year_col) if isinstance(year_col, str) else F.lit(year_col)
-    return df.withColumn(alias, (F.year(F.col(date_col)) - base).cast("int"))
-
-
 def regexp_extract_col(
     df: DataFrame, src: str, pattern: str, group: int, alias: str, cast: str | None = None
 ) -> DataFrame:

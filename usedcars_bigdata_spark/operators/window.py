@@ -13,14 +13,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def ordered_window(
-    partition_by: Sequence[str], order_by: Sequence[Column | str]
-) -> WindowSpec:
-    return Window.partitionBy(*partition_by).orderBy(*order_by)
 
 
 # Bucket frames persisted by the two-pass operators below. persist() goes

@@ -22,6 +22,13 @@ from . import statsq as _statsq  # noqa: E402,F401
 # 38 (-> 17 remaining), round 12 takes the rest and empties the backlog.
 # Every rotated-out entry keeps pytest + full-registry dtype-checked
 # driver_sim coverage meanwhile.
+#
+# CONTRACT_WINDOW_ROUND is the round the current window was queued for. The
+# rotation ledger checks the window against the driver rows of the rounds
+# BEFORE it, so committing that round's (or a later) CORRECTNESS file does
+# not change the verdict; bump it together with the window at each rotation.
+CONTRACT_WINDOW_ROUND = 12
+
 _CONTRACT_PRIORITY = [
     "ref_q1_avg_price_by_priority",
     "ref_q2_median_value_by_type",
@@ -477,4 +484,4 @@ def _apply_contract_order() -> None:
 
 _apply_contract_order()
 
-__all__ = ["QUERIES", "ORACLES", "query"]
+__all__ = ["CONTRACT_WINDOW_ROUND", "QUERIES", "ORACLES", "query"]

@@ -1191,7 +1191,6 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.joins import clicks_left_outer_purchases
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_louter_"
@@ -1926,7 +1925,6 @@ def ts_stream_rate_limit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.stateful import streaming_token_bucket
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_rate_limit_sink"
     for q in spark.streams.active:
         if q.name == sink:

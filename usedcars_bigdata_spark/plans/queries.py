@@ -942,9 +942,6 @@ def ts_stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     size."""
     from ..streaming.events import read_event_stream, windowed_counts
 
-    # same session-independence contract as load_table: the driver hands
-    # us a plain session, and the events file schema needs nanosAsLong
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_microbatch_sink"
     for q in spark.streams.active:
         if q.name == sink:
@@ -1002,7 +999,6 @@ def ts_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeseries import ohlc_resample
     from ..streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_ohlc_sink"
     for q in spark.streams.active:
         if q.name == sink:
@@ -1042,7 +1038,6 @@ def ts_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dedup import dedup_within_watermark, hourly_user_action_keys
     from ..streaming.events import read_event_stream
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_dedup_sink"
     for q in spark.streams.active:
         if q.name == sink:
@@ -1090,7 +1085,6 @@ def ts_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.joins import EVENT_TIER_DIM, enrich_with_tiers
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_static_sink"
     for q in spark.streams.active:
         if q.name == sink:
@@ -3323,7 +3317,6 @@ def ts_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.joins import clicks_to_purchases
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_stream_join_sink"
     for q in spark.streams.active:
         if q.name == sink:
@@ -3387,7 +3380,6 @@ def ts_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.stateful import running_anomaly_flags
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sink = "ts_stream_stateful_sink"
     for q in spark.streams.active:
         if q.name == sink:
@@ -5334,7 +5326,6 @@ def ts_stream_multibatch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.events import read_event_stream, windowed_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_mb_"
@@ -5403,7 +5394,6 @@ def ts_stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.sinks import upsert_to_parquet
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     base = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_upsert_"
@@ -7458,7 +7448,6 @@ def ts_stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.stateful import streaming_sessionize
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_sess_"
@@ -8088,7 +8077,6 @@ def rows_stream_late_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.events import read_event_stream, windowed_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_late_"
@@ -8654,7 +8642,6 @@ def ts_stream_anomaly_scalable_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.stateful import running_anomaly_flags_scalable
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     base = os.path.join(
         tempfile.gettempdir(),
         "usedcars_anom_scal_"

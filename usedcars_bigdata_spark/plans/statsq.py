@@ -1169,7 +1169,6 @@ def ts_stream_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.events import read_event_stream, user_spend_totals
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_mb_"
@@ -2704,7 +2703,6 @@ def ts_stream_kmv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
     from ..streaming.sinks import streaming_kmv_signature
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(
         tempfile.gettempdir(),
         "usedcars_stream_mb_"

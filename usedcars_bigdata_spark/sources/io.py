@@ -8,17 +8,87 @@ but defaults to parquet (columnar scan, predicate pushdown, column pruning
 unchanged (file://, hdfs://, gs://, s3a://) — path handling is delegated to
 Spark's Hadoop FS layer, so the same code runs on a laptop and a 1000-node
 cluster.
+
+Parquet schemas are resolved once per file version: ``parquet_schema``
+memoizes the physical ``StructType`` Spark infers for a local path, keyed by
+the (path, size, mtime) of every file the path matches plus the session
+confs that change inference. A schema-less ``spark.read.parquet`` launches
+a footer-reading job on every call; the reference pays the CSV analogue
+(inferSchema) at every load. Only the schema is cached, never a DataFrame:
+each ``load_table`` call must return a fresh relation with its own
+attribute ids, or a self-join of a table with itself would not resolve.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import re
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import TESTDATA
+
+
+# Session confs that change the schema parquet inference returns; they are
+# part of the memo key so a session with other settings never reuses one.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO_SIZE = 64
+_SCHEMA_MEMO: OrderedDict[tuple, T.StructType] = OrderedDict()
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def _file_versions(path: str) -> tuple | None:
+    """(absolute path, size, mtime_ns) of every file a local path, directory
+    or glob matches; None for a URI with a scheme or when nothing matches,
+    so the caller falls back to inferring on every call."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        return None
+    files = []
+    for match in glob.glob(path):
+        if os.path.isdir(match):
+            for root, _, names in os.walk(match):
+                files.extend(os.path.join(root, n) for n in names)
+        else:
+            files.append(match)
+    try:
+        versions = []
+        for f in sorted(files):
+            st = os.stat(f)
+            versions.append((os.path.abspath(f), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(versions) or None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The physical schema ``spark.read.parquet(path)`` infers, resolved once
+    per file version. The first call for a version runs the inference job;
+    later calls with the same files and inference confs return the memoized
+    schema without touching Spark. A rewritten, added or removed file
+    changes the key, so the next call probes again."""
+    files = _file_versions(path)
+    if files is None:
+        return spark.read.parquet(path).schema
+    key = (files, tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _SCHEMA_MEMO_LOCK:
+            _SCHEMA_MEMO[key] = schema
+            while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
+                _SCHEMA_MEMO.popitem(last=False)
+    return schema
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -131,11 +201,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       as TIMESTAMP_NTZ and is cast to TimestampType. Engine sessions pin
       UTC (session.py), where the cast is epoch-preserving; the naive
       wall-clock value is identical to what the DuckDB oracle reads
-      either way."""
+      either way.
+
+    The physical schema comes from ``parquet_schema``, so only the first
+    load of a file version pays the inference job; every call still builds
+    a new relation (fresh attribute ids), which keeps self-joins resolving."""
     if name not in TESTDATA:
         raise KeyError(f"unknown testdata table {name!r}; have {sorted(TESTDATA)}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     want = TESTDATA.get(name)
     if want is not None:
         for field in want.fields:

@@ -18,12 +18,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import TESTDATA
+from ..sources.io import parquet_schema
 
 # File-source schemas: the harness has generated events.ts as INT64
 # TIMESTAMP(NANOS) (surfaces as long under nanosAsLong — see sources/io.py)
 # in earlier rounds and as native INT64 micros NTZ since round 3. Streaming
 # file sources need an explicit schema, so probe the file's surfaced type
-# with a one-off batch read and pick the matching schema + conversion.
+# (memoized per file version, sources.io.parquet_schema) and pick the
+# matching schema + conversion.
 _EVENTS_SCHEMA_NANOS = (
     "event_id long, ts long, user_id long, event_type string, "
     "value double, props string"
@@ -153,7 +155,12 @@ def read_event_stream(
     time. The previous batch value is snapshotted here; callers restore
     it with ``restore_shuffle_partitions(spark)`` right after
     ``.start()`` (safe: the query clones the session inside start), so
-    the mutation never outlives the query start."""
+    the mutation never outlives the query start.
+
+    Like ``load_table`` it sets ``nanosAsLong`` itself (a plain session
+    cannot read INT64 nanos files without it), and its ``ts`` probe goes
+    through ``sources.io.parquet_schema``, so only the first build over a
+    given set of files runs the inference job."""
     import os
 
     save_batch_shuffle_conf(spark)
@@ -162,7 +169,8 @@ def read_event_stream(
         str(stream_shuffle_partitions(spark, directory, glob,
                                       floor=partition_floor)),
     )
-    probe = spark.read.parquet(os.path.join(directory, glob)).schema["ts"]
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    probe = parquet_schema(spark, os.path.join(directory, glob))["ts"]
     nanos = probe.dataType.simpleString() == "bigint"
     raw = (
         spark.readStream.schema(
