@@ -137,10 +137,10 @@ def time_isolated(name: str, sf_dir: str) -> float:
 
 
 def time_query(spark, sf_dir: str, name: str) -> float:
-    # Stream entries set a data-derived spark.sql.shuffle.partitions for
-    # their own query (streaming.events.stream_shuffle_partitions, r12);
-    # restore the session default afterwards so batch entries keep
-    # planning at the engine default (same per-entry hygiene as
+    # Stream entries size their own query inside streaming.events.run_stream,
+    # which puts the session's value back after start(); restoring it here
+    # too keeps batch entries planning at the engine default even if an
+    # entry changes the conf some other way (same per-entry hygiene as
     # clearCache below).
     default_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:

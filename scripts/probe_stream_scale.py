@@ -75,7 +75,10 @@ def build_events(spark, copies: int) -> str:
 
 
 def probe_join(spark, copies: int) -> dict:
-    from usedcars_bigdata_spark.streaming.events import read_event_stream
+    from usedcars_bigdata_spark.streaming.events import (
+        read_event_stream,
+        run_stream,
+    )
     from usedcars_bigdata_spark.streaming.joins import clicks_to_purchases
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -90,14 +93,7 @@ def probe_join(spark, copies: int) -> dict:
     )
     sink = f"probe_join_{copies}x"
     t0 = time.time()
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_stream(joined, sink)
     wall = time.time() - t0
     n = spark.table(sink).count()
     out = _state_summary([json.loads(p.json) for p in q.recentProgress])
@@ -203,6 +199,15 @@ def probe_agg(spark, copies: int, hot: bool = False) -> dict:
 def _run_to_parquet(spark, out_df, tag: str, hot: bool) -> dict:
     import shutil
 
+    from usedcars_bigdata_spark.streaming.events import (
+        query_shuffle_partitions,
+    )
+
+    # run_stream has no parquet sink, so size the query here by the same
+    # rule (the source bytes in its plan).
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(query_shuffle_partitions(out_df))
+    )
     root = os.path.join(BASE, f"sink_{tag}")
     if os.path.exists(root):
         shutil.rmtree(root)

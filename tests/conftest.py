@@ -44,21 +44,16 @@ def _drain_two_pass_hubs():
 
 
 @pytest.fixture(autouse=True)
-def _restore_shuffle_partitions():
-    """Stream entries set a data-derived spark.sql.shuffle.partitions for
-    their own query (streaming.events.stream_shuffle_partitions, r12) and
-    restore it after query start (r13) — this fixture is the safety net
-    for a test that RAISES between the save and the restore. Restores the
-    value the session fixture was configured with (not a hardcoded
-    literal) and drains the events module's pending snapshot so a failing
-    test can't leak a stale saved value into the next one."""
+def _reset_shuffle_partitions():
+    """Safety net for tests that set spark.sql.shuffle.partitions
+    themselves: restores the value the session fixture was configured
+    with (not a hardcoded literal) so a failing test can't leak its conf
+    into the next one. (Stream queries only change it inside
+    streaming.events.run_stream, around start().)"""
     yield
     try:
         from pyspark.sql import SparkSession
 
-        from usedcars_bigdata_spark.streaming import events as _ev
-
-        _ev._SAVED_BATCH_SHUFFLE.clear()
         s = SparkSession.getActiveSession()
         if s is not None and _SESSION_SHUFFLE_DEFAULT:
             s.conf.set(

@@ -21,7 +21,9 @@ def batch_events(spark, sf_dir):
 
 def test_windowed_counts_stream_equals_batch(spark, sf_dir, batch_events):
     stream = SE.read_event_stream(spark, sf_dir)
-    q = SE.run_to_memory_sink(SE.windowed_counts(stream), "win_out")
+    q = SE.run_stream(
+        SE.windowed_counts(stream), "win_out", output_mode="complete"
+    )
     try:
         got = spark.sql("SELECT * FROM win_out")
         want = SE.windowed_counts(batch_events)
@@ -53,7 +55,9 @@ def test_rocksdb_state_store_parity(spark, sf_dir, batch_events):
             == ROCKSDB_PROVIDER
         )
         stream = SE.read_event_stream(spark, sf_dir)
-        q = SE.run_to_memory_sink(SE.windowed_counts(stream), "rocksdb_out")
+        q = SE.run_stream(
+            SE.windowed_counts(stream), "rocksdb_out", output_mode="complete"
+        )
         try:
             got = _rows(
                 spark.sql("SELECT * FROM rocksdb_out"),
@@ -76,7 +80,9 @@ def test_rocksdb_state_store_parity(spark, sf_dir, batch_events):
 
 def test_session_aggregates_stream_equals_batch(spark, sf_dir, batch_events):
     stream = SE.read_event_stream(spark, sf_dir)
-    q = SE.run_to_memory_sink(SE.session_aggregates(stream), "sess_out")
+    q = SE.run_stream(
+        SE.session_aggregates(stream), "sess_out", output_mode="complete"
+    )
     try:
         got = spark.sql("SELECT * FROM sess_out")
         want = SE.session_aggregates(batch_events)
@@ -88,8 +94,10 @@ def test_session_aggregates_stream_equals_batch(spark, sf_dir, batch_events):
 
 def test_sliding_windows_stream(spark, sf_dir, batch_events):
     stream = SE.read_event_stream(spark, sf_dir)
-    q = SE.run_to_memory_sink(
-        SE.windowed_counts(stream, window="1 hour", slide="30 minutes"), "slide_out"
+    q = SE.run_stream(
+        SE.windowed_counts(stream, window="1 hour", slide="30 minutes"),
+        "slide_out",
+        output_mode="complete",
     )
     try:
         got = spark.sql("SELECT * FROM slide_out")
@@ -109,7 +117,7 @@ def test_stateful_anomaly_flags_stream_equals_batch(spark, sf_dir, batch_events)
     from usedcars_bigdata_spark.streaming import stateful as ST
 
     stream = SE.read_event_stream(spark, sf_dir)
-    q = SE.run_to_memory_sink(
+    q = SE.run_stream(
         ST.running_anomaly_flags(stream), "anom_out", output_mode="append"
     )
     try:
@@ -238,7 +246,7 @@ def test_scalable_anomaly_multibatch_equals_python_fold(spark, sf_dir, batch_eve
     finally:
         q.stop()
     got = spark.read.parquet(str(tmp_path / "out"))
-    q2 = SE.run_to_memory_sink(
+    q2 = SE.run_stream(
         ST.running_anomaly_flags(stream), "anom_fold_mb", output_mode="append"
     )
     try:
@@ -250,8 +258,7 @@ def test_scalable_anomaly_multibatch_equals_python_fold(spark, sf_dir, batch_eve
         q2.stop()
 
 
-def test_stream_shuffle_partitions_scale_adaptive(spark, sf_dir, tmp_path,
-                                                  monkeypatch):
+def test_stream_shuffle_partitions_scale_adaptive(spark, tmp_path):
     """r12 optimization: streaming queries size their shuffle/state
     partitioning to the SOURCE bytes (~64 MiB per partition, floor 4,
     capped at the session batch default) instead of inheriting the
@@ -259,13 +266,11 @@ def test_stream_shuffle_partitions_scale_adaptive(spark, sf_dir, tmp_path,
     per-micro-batch commit cost. Pins the derivation rule's edges:
     tiny source → floor; unmeasurable source → batch default (never
     the local floor, which would serialize a production stream);
-    env override wins; big source → bytes-derived but capped."""
+    big source → bytes-derived but capped."""
     from usedcars_bigdata_spark.streaming.events import (
         stream_shuffle_partitions,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-                       raising=False)
     batch_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # tiny local source → the compute-parallelism floor (a tmp_path
@@ -304,57 +309,161 @@ def test_stream_shuffle_partitions_scale_adaptive(spark, sf_dir, tmp_path,
     )
     assert capped == min(12, batch_default)
 
-    # env override wins over everything
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "7")
-    assert stream_shuffle_partitions(spark, sf_dir, "events.parquet") == 7
-
 
 def test_stream_conf_scoped_to_query_start(spark, sf_dir):
-    """r13 (r12 ADVICE 'medium'): read_event_stream's shuffle-partitions
-    mutation is SCOPED — the batch default is snapshotted before the set
-    and restored right after the streaming query starts (the query clones
-    the session inside start(), so the restore can't affect it). A
-    library caller running batch work after a stream in the same session
-    must plan at its own default again, and the running stream must still
-    use the data-derived count."""
-    from usedcars_bigdata_spark.streaming import events as SE
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    """run_stream sets the query's data-derived partition count around
+    start() only: building the stream leaves the conf alone, the caller's
+    value is back once run_stream returns, and the query still ran its
+    state operators at the derived count (the query clones the session
+    conf inside start())."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
     stream = SE.read_event_stream(spark, sf_dir)
-    derived = spark.conf.get("spark.sql.shuffle.partitions")
-    # mutation visible between build and start (that's what start() reads)
-    assert derived == "4"
-    assert SE._SAVED_BATCH_SHUFFLE == [before]
-    q = SE.run_to_memory_sink(
-        SE.windowed_counts(stream), "conf_scope_sink"
+    assert spark.conf.get(key) == before
+    q = SE.run_stream(
+        SE.windowed_counts(stream), "conf_scope_sink", output_mode="complete"
     )
-    try:
-        # restored for the caller the moment start() returned...
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-        assert SE._SAVED_BATCH_SHUFFLE == []
-        # ...while the running query kept the derived count: its state
-        # operator count equals the derived partitions, not the default
-        prog = q.lastProgress
-        ops = prog["stateOperators"]
-        assert ops and all(
-            op["numShufflePartitions"] == 4 for op in ops
-        ), ops
-    finally:
-        q.stop()
+    assert spark.conf.get(key) == before
+    ops = q.lastProgress["stateOperators"]
+    assert ops and all(op["numShufflePartitions"] == 4 for op in ops), ops
 
 
-def test_save_restore_shuffle_conf_idempotent(spark):
-    """Double-save keeps the ORIGINAL batch value (a stream-stream join
-    builds two streams before one start); restore with nothing pending is
-    a no-op."""
-    from usedcars_bigdata_spark.streaming import events as SE
+def test_run_stream_failed_start_keeps_conf(spark, sf_dir):
+    """A start() that raises (complete mode needs an aggregation) leaves
+    the caller's conf as it was and no query behind."""
+    from pyspark.errors import AnalysisException
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    SE.restore_shuffle_partitions(spark)  # nothing pending: no-op
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    SE.save_batch_shuffle_conf(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "5")
-    SE.save_batch_shuffle_conf(spark)  # must NOT overwrite the snapshot
-    spark.conf.set("spark.sql.shuffle.partitions", "6")
-    SE.restore_shuffle_partitions(spark)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(AnalysisException):
+        SE.run_stream(
+            SE.read_event_stream(spark, sf_dir), "bad_mode_sink",
+            output_mode="complete",
+        )
+    assert spark.conf.get(key) == before
+    assert all(q.name != "bad_mode_sink" for q in spark.streams.active)
+
+
+def test_run_stream_sessions_keep_their_own_conf(spark, sf_dir):
+    """The conf is saved and restored per session: runs interleaved over
+    two sessions with different defaults leave each its own value."""
+    key = "spark.sql.shuffle.partitions"
+    other = spark.newSession()
+    other.conf.set(key, "6")
+    mine = spark.conf.get(key)
+    assert mine != "6"
+    for i, session in enumerate([spark, other, spark, other]):
+        q = SE.run_stream(
+            SE.windowed_counts(SE.read_event_stream(session, sf_dir)),
+            f"two_sessions_{i}",
+            output_mode="complete",
+        )
+        ops = q.lastProgress["stateOperators"]
+        assert ops and all(op["numShufflePartitions"] == 4 for op in ops)
+        assert spark.conf.get(key) == mine
+        assert other.conf.get(key) == "6"
+
+
+def test_run_stream_times_out(spark, sf_dir, monkeypatch):
+    """A query that does not drain within STREAM_TIMEOUT_S is stopped and
+    reported as TimeoutError instead of blocking the caller."""
+    import time
+
+    monkeypatch.setattr(SE, "STREAM_TIMEOUT_S", 1)
+
+    def slow(batch_df, batch_id):
+        time.sleep(5)
+
+    with pytest.raises(TimeoutError):
+        SE.run_stream(
+            SE.read_event_stream(spark, sf_dir), "slow_sink",
+            foreach_batch=slow,
+        )
+    assert all(q.name != "slow_sink" for q in spark.streams.active)
+
+
+def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
+    """The runner's count comes from the sources in the query's plan and
+    equals the byte rule over that (dir, glob): for read_event_stream, for
+    a raw readStream, and for a self-join, whose one source counts once.
+    A source without a path keeps the batch default."""
+    from pyspark.sql import functions as F
+
+    from usedcars_bigdata_spark.streaming.joins import clicks_to_purchases
+
+    events = SE.read_event_stream(spark, sf_dir)
+    assert SE.stream_sources(events) == {(sf_dir, "events.parquet")}
+    for floor in (4, 8):
+        assert SE.query_shuffle_partitions(
+            events, floor
+        ) == SE.stream_shuffle_partitions(
+            spark, sf_dir, "events.parquet", floor=floor
+        )
+
+    src = str(tmp_path / "raw")
+    spark.range(100).write.parquet(src)
+    raw = (
+        spark.readStream.schema("id long")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(src)
+    )
+    assert SE.stream_sources(raw) == {(src, "*.parquet")}
+    assert SE.query_shuffle_partitions(raw) == SE.stream_shuffle_partitions(
+        spark, src, "*.parquet"
+    )
+
+    joined = clicks_to_purchases(
+        events.filter(F.col("event_type") == "click"),
+        events.filter(F.col("event_type") == "purchase"),
+        max_gap="1 hour",
+        watermark="2 hours",
+    )
+    assert SE.stream_sources(joined) == {(sf_dir, "events.parquet")}
+
+    rate = spark.readStream.format("rate").load()
+    assert SE.stream_sources(rate) is None
+    assert SE.query_shuffle_partitions(rate) == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+
+def test_only_run_stream_starts_streams():
+    """Structural guard: in the package, ``.writeStream`` is touched only
+    inside streaming.events.run_stream, and nothing under plans/ or
+    streaming/ sets spark.sql.shuffle.partitions except run_stream."""
+    import ast
+    import pathlib
+
+    import usedcars_bigdata_spark
+
+    root = pathlib.Path(usedcars_bigdata_spark.__file__).parent
+    key = "spark.sql.shuffle.partitions"
+    writers, setters = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):  # outer defs first, so inner ones win
+            if isinstance(fn, ast.FunctionDef):
+                for node in ast.walk(fn):
+                    owner[node] = fn
+        for node in ast.walk(tree):
+            scope = owner.get(node, tree)
+            where = (rel, getattr(scope, "name", "<module>"))
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                writers.append(where)
+            if (
+                rel.startswith(("plans/", "streaming/"))
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "config", "sql")
+                and any(
+                    isinstance(c, ast.Constant) and isinstance(c.value, str)
+                    and key in c.value
+                    for c in ast.walk(scope)
+                )
+            ):
+                setters.append(where)
+    runner = ("streaming/events.py", "run_stream")
+    assert writers and set(writers) == {runner}, writers
+    assert set(setters) <= {runner}, setters

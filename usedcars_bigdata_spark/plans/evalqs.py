@@ -22,7 +22,7 @@ from ..ml import eval as ME
 from ..operators import graph as G
 from ..sources import load_table
 from .registry import query
-from ..streaming.events import restore_shuffle_partitions as _restore_stream_conf
+from ..streaming.events import run_stream
 
 # Shared synthesis: one row per order with (label, score, price_cents, fold).
 _SCORED_CTE = """
@@ -1230,9 +1230,6 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(done, "w") as fh:
             fh.write("ok")
     sink = "ts_stream_left_outer_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = read_event_stream(spark, src, glob="*.parquet",
                                max_files_per_trigger=1)
     joined = clicks_left_outer_purchases(
@@ -1241,15 +1238,7 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_gap="1 hour",
         watermark="2 hours",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    q = run_stream(joined, sink)
     # Honesty check: with maxFilesPerTrigger=1 every written part file is
     # its own micro-batch. Count the actual files rather than assuming
     # repartitionByRange(3) produced 3 (an empty range at a tiny SF
@@ -1926,20 +1915,9 @@ def ts_stream_rate_limit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import streaming_token_bucket
 
     sink = "ts_stream_rate_limit_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = read_event_stream(spark, sf_dir)
     out = streaming_token_bucket(stream, rate_per_hour=6, capacity=3)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(out, sink)
     return spark.table(sink)
 
 

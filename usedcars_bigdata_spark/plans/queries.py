@@ -29,7 +29,7 @@ from ..operators import timeseries as TS
 from ..operators import window as W
 from ..sources import load_table
 from .registry import query
-from ..streaming.events import restore_shuffle_partitions as _restore_stream_conf
+from ..streaming.events import run_stream
 
 # ---------------------------------------------------------------------------
 # Reference parity: the three benchmark queries
@@ -943,19 +943,8 @@ def ts_stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream, windowed_counts
 
     sink = "ts_stream_microbatch_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = windowed_counts(read_event_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(stream, sink, output_mode="complete")
     return spark.table(sink)
 
 
@@ -1000,20 +989,9 @@ def ts_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
 
     sink = "ts_stream_ohlc_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = read_event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     out = ohlc_resample(stream, "ts", "event_type", "value", "event_id")
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(out, sink, output_mode="complete")
     return spark.table(sink)
 
 
@@ -1039,22 +1017,11 @@ def ts_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import read_event_stream
 
     sink = "ts_stream_dedup_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     keys = hourly_user_action_keys(read_event_stream(spark, sf_dir))
     deduped = dedup_within_watermark(
         keys, ["user_id", "event_type", "hour_start"]
     ).select("user_id", "event_type", "hour_start")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(deduped, sink)
     return spark.table(sink)
 
 
@@ -1086,20 +1053,9 @@ def ts_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.joins import EVENT_TIER_DIM, enrich_with_tiers
 
     sink = "ts_stream_static_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     dim = spark.createDataFrame(EVENT_TIER_DIM, "event_type string, tier string")
     out = enrich_with_tiers(read_event_stream(spark, sf_dir), dim)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(out, sink, output_mode="complete")
     return spark.table(sink)
 
 
@@ -3318,9 +3274,6 @@ def ts_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.joins import clicks_to_purchases
 
     sink = "ts_stream_stream_join_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = read_event_stream(spark, sf_dir)
     joined = clicks_to_purchases(
         stream.filter(F.col("event_type") == "click"),
@@ -3328,15 +3281,7 @@ def ts_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_gap="1 hour",
         watermark="2 hours",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(joined, sink)
     return spark.table(sink)
 
 
@@ -3381,22 +3326,11 @@ def ts_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_anomaly_flags
 
     sink = "ts_stream_stateful_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     cents = read_event_stream(spark, sf_dir).withColumn(
         "value", F.round(F.col("value") * 100)
     )
     flags = running_anomaly_flags(cents)
-    q = (
-        flags.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    run_stream(flags, sink)
     return spark.table(sink).select(
         "user_id",
         "event_id",
@@ -5297,6 +5231,26 @@ def rel_pivot_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _multibatch_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The events table re-laid-out as THREE parquet files split by
+    event-time range, written once per application and shared by the
+    multi-micro-batch stream entries: streamed with maxFilesPerTrigger=1,
+    each file is one micro-batch and event time advances monotonically."""
+    import os
+    import tempfile
+
+    src = os.path.join(
+        tempfile.gettempdir(),
+        "usedcars_stream_mb_"
+        f"{os.path.basename(sf_dir.rstrip('/'))}_"
+        f"{spark.sparkContext.applicationId}",
+    )
+    if not os.path.exists(os.path.join(src, "_SUCCESS")):
+        events = load_table(spark, sf_dir, "events")
+        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
+    return src
+
+
 @query(
     "ts_stream_multibatch",
     oracle="""
@@ -5321,40 +5275,14 @@ def ts_stream_multibatch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Range-split (not random) so each batch advances event time
     monotonically, the realistic arrival order. Tempdir keyed by
     applicationId per the repo precedent."""
-    import os
-    import tempfile
-
     from ..streaming.events import read_event_stream, windowed_counts
 
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_mb_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        (
-            events.repartitionByRange(3, "ts")
-            .write.mode("overwrite")
-            .parquet(src)
-        )
+    src = _multibatch_events_dir(spark, sf_dir)
     sink = "ts_stream_multibatch_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = windowed_counts(
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1)
     )
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    q = run_stream(stream, sink, output_mode="complete")
     n_batches = len(q.recentProgress)
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     return spark.table(sink)
@@ -5400,12 +5328,9 @@ def ts_stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{os.path.basename(sf_dir.rstrip('/'))}_"
         f"{spark.sparkContext.applicationId}",
     )
-    src = os.path.join(base, "src")
+    src = _multibatch_events_dir(spark, sf_dir)
     target = os.path.join(base, "target")
     ck = os.path.join(base, "ck")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
     # Fresh target/checkpoint per run: the upsert is idempotent per batch,
     # but a stale checkpoint would mark all input processed and leave the
     # (possibly partially deleted) old target as the answer.
@@ -5413,9 +5338,6 @@ def ts_stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(d):
             shutil.rmtree(d)
     sink = "ts_stream_upsert_sink_q"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     agg = (
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1)
         .groupBy((F.col("user_id") % 20).alias("bucket"))
@@ -5479,17 +5401,6 @@ def ts_stream_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = os.path.join(base, d)
         if os.path.exists(p):
             shutil.rmtree(p)
-    from ..streaming.events import (
-        save_batch_shuffle_conf,
-        stream_shuffle_partitions,
-    )
-
-    # saved here, restored by the sink helper right after .start() (r13)
-    save_batch_shuffle_conf(spark)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_shuffle_partitions(spark, src, "*.parquet")),
-    )
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -5497,9 +5408,6 @@ def ts_stream_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     sink = "rows_stream_near_dup_q"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     q = streaming_near_dup_flags(
         stream,
         state_dir=os.path.join(base, "state"),
@@ -5591,20 +5499,6 @@ def rows_stream_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(p):
             shutil.rmtree(p)
     sink = "rows_stream_hw_q"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
-    from ..streaming.events import (
-        save_batch_shuffle_conf,
-        stream_shuffle_partitions,
-    )
-
-    # saved here, restored by the sink helper right after .start() (r13)
-    save_batch_shuffle_conf(spark)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_shuffle_partitions(spark, src, "*.parquet")),
-    )
     stream = (
         spark.readStream.schema("event_type string, b timestamp, x double")
         .option("maxFilesPerTrigger", 1)
@@ -7464,27 +7358,15 @@ def ts_stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(done, "w") as fh:
             fh.write("ok")
     sink = "ts_stream_sessionize_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     sessions = streaming_sessionize(
-        # partition_floor=8 (r13, r12 verdict #1): the applyInPandasWithState
-        # session fold is per-batch COMPUTE-heavy (pandas groupby fold per
-        # partition), unlike the state-commit-bound entries the byte rule's
-        # floor of 4 was measured on — min 5.6 s at 8 partitions vs 8.7 s
-        # at 4 (r12 interleaved fresh-JVM A/B, re-verified r13).
-        read_event_stream(spark, src, glob="*.parquet",
-                          max_files_per_trigger=1, partition_floor=8)
+        read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1)
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    # floor=8 (r13, r12 verdict #1): the applyInPandasWithState session
+    # fold is per-batch COMPUTE-heavy (pandas groupby fold per partition),
+    # unlike the state-commit-bound entries the byte rule's floor of 4 was
+    # measured on — min 5.6 s at 8 partitions vs 8.7 s at 4 (r12
+    # interleaved fresh-JVM A/B, re-verified r13).
+    q = run_stream(sessions, sink, floor=8)
     n_batches = len(q.recentProgress)
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     return spark.table(sink)
@@ -8106,22 +7988,11 @@ def rows_stream_late_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     planted = spark.read.parquet(parts[2]).count()
     sink = "rows_stream_late_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     stream = windowed_counts(
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1),
         watermark="1 hour",
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    q = run_stream(stream, sink)
     dropped = 0
     for p in q.recentProgress:
         d = p if isinstance(p, dict) else json.loads(p.json)
@@ -8648,9 +8519,6 @@ def ts_stream_anomaly_scalable_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{os.path.basename(sf_dir.rstrip('/'))}_"
         f"{spark.sparkContext.applicationId}",
     )
-    for q in spark.streams.active:
-        if q.name == "ts_anom_scal":
-            q.stop()
     # Fresh state/out/checkpoint per run: a stale checkpoint would mark
     # all input processed and return the previous run's parquet as-is.
     for d in ("state", "out", "ck"):

@@ -29,8 +29,9 @@ from ..operators import rankstats as RS
 from ..operators import timeseries as TS
 from ..sources import load_table
 from .evalqs import _EDGES_CTE, _copurchase_edges
+from .queries import _multibatch_events_dir
 from .registry import query
-from ..streaming.events import restore_shuffle_partitions as _restore_stream_conf
+from ..streaming.events import run_stream
 
 
 @query(
@@ -1164,36 +1165,14 @@ def ts_stream_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch accumulation exact, so the streaming result hash-equals
     the one-shot batch GROUP BY oracle — batch/stream parity for the
     running-total shape that powers live dashboards."""
-    import os
-    import tempfile
-
     from ..streaming.events import read_event_stream, user_spend_totals
 
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_mb_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
+    src = _multibatch_events_dir(spark, sf_dir)
     sink = "ts_stream_topk_sink"
-    for q in spark.streams.active:
-        if q.name == sink:
-            q.stop()
     totals = user_spend_totals(
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1)
     )
-    q = (
-        totals.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _restore_stream_conf(spark)
-    q.awaitTermination()
+    q = run_stream(totals, sink, output_mode="complete")
     w = Window.orderBy(F.col("spend_cents").desc(), F.col("user_id").asc())
     return (
         spark.table(sink)
@@ -2697,21 +2676,10 @@ def ts_stream_kmv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot batch sketch whatever the batch boundaries (the oracle IS
     the batch sketch — the strongest mergeability statement the harness
     can make, the sketch twin of ts_stream_topk's exact-count parity)."""
-    import os
-    import tempfile
-
     from ..streaming.events import read_event_stream
     from ..streaming.sinks import streaming_kmv_signature
 
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_mb_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
+    src = _multibatch_events_dir(spark, sf_dir)
     stream = read_event_stream(
         spark, src, glob="*.parquet", max_files_per_trigger=1
     ).select("event_type", "user_id")

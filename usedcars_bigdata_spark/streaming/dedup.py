@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import events
+from .events import run_stream
 
 
 def _run_token(checkpoint: str) -> str:
@@ -245,15 +245,10 @@ def streaming_near_dup_flags(
             marker=_replay_marker(checkpoint, batch_id, token=token),
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
+    return run_stream(
+        docs_stream, query_name, foreach_batch=handle, checkpoint=checkpoint,
+        available_now=False,
     )
-    events.restore_shuffle_partitions(docs_stream.sparkSession)
-    return q
 
 
 def streaming_holt_winters(
@@ -367,12 +362,7 @@ def streaming_holt_winters(
     # carry via applyInPandasWithState — the stateful-anomaly entry
     # demonstrates that API; this one demonstrates durable cross-restart
     # state in plain parquet.
-    q = (
-        series_stream.writeStream.foreachBatch(handle)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
+    return run_stream(
+        series_stream, query_name, foreach_batch=handle,
+        checkpoint=checkpoint, available_now=False,
     )
-    events.restore_shuffle_partitions(series_stream.sparkSession)
-    return q

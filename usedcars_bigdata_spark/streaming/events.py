@@ -9,9 +9,16 @@ output mode 'update'/'append' chosen per sink semantics.
 
 At production scale the source is Kafka (``spark.readStream.format("kafka")``)
 partitioned by user/key; here the file source replays the harness parquet.
+
+Building a stream has no effect on partition sizing: ``read_event_stream``
+only describes the source. ``run_stream`` is the one place a query starts;
+it sizes the query's shuffle/state partitions from the sources in its plan,
+sets that conf around ``start()`` alone, and drains with a time bound.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,47 +43,15 @@ _EVENTS_SCHEMA_MICROS = (
 )
 
 
-# Batch spark.sql.shuffle.partitions saved by the FIRST conf mutation of a
-# stream build (read_event_stream / save_batch_shuffle_conf) and restored by
-# restore_shuffle_partitions once the streaming query has started. One slot,
-# not a stack: an entry that builds two streams (stream-stream join) keeps
-# the ORIGINAL batch value through both and restores it once.
-_SAVED_BATCH_SHUFFLE: list[str] = []
-
-
-def save_batch_shuffle_conf(spark: SparkSession) -> None:
-    """Snapshot the session's batch shuffle-partition count before a stream
-    build mutates it (no-op if a snapshot is already pending)."""
-    if not _SAVED_BATCH_SHUFFLE:
-        _SAVED_BATCH_SHUFFLE.append(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-
-
-def restore_shuffle_partitions(spark: SparkSession) -> None:
-    """Restore the batch shuffle-partition count saved before a stream
-    build; call IMMEDIATELY AFTER ``writeStream...start()`` (r13, ADVICE
-    r12 'medium').
-
-    Safe at that point: a streaming query clones the session synchronously
-    inside start() (StreamExecution's sparkSessionForStream), so the
-    running query keeps planning its state stores at the data-derived
-    count while the caller's session goes back to batch planning at the
-    engine default — no more session-global side effect leaking a
-    stream-sized (possibly floor-4) conf into a library caller's
-    subsequent batch shuffles. No-op when nothing is pending."""
-    if _SAVED_BATCH_SHUFFLE:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", _SAVED_BATCH_SHUFFLE.pop()
-        )
-        _SAVED_BATCH_SHUFFLE.clear()
+# Source bytes per stream shuffle/state partition.
+_TARGET_BYTES = 64 << 20
 
 
 def stream_shuffle_partitions(
     spark: SparkSession,
     directory: str,
     glob: str = "*",
-    target_bytes: int = 64 << 20,
+    target_bytes: int = _TARGET_BYTES,
     floor: int = 4,
 ) -> int:
     """Scale-adaptive shuffle-partition count for a streaming query over
@@ -109,15 +84,19 @@ def stream_shuffle_partitions(
       cores and AQE-coalesced; a 100 TB source hits the cap and keeps
       full parallelism).
 
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides the derived
-    value for cluster tuning (and lets benchmarks A/B the rule)."""
+    An unmeasurable source (nothing matched, non-local path) keeps the
+    batch default. ``run_stream`` applies this rule at query start."""
+    return _partitions_for_bytes(
+        spark, _source_bytes(directory, glob), target_bytes, floor
+    )
+
+
+def _source_bytes(directory: str, glob: str) -> int:
+    """Total size of the files under ``directory`` whose names match
+    ``glob``; 0 for a missing, unreadable or non-local path."""
     import fnmatch
     import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    batch_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if env:
-        return max(1, int(env))
     total = 0
     try:
         for root, _dirs, files in os.walk(directory):
@@ -125,7 +104,14 @@ def stream_shuffle_partitions(
                 if fnmatch.fnmatch(f, glob):
                     total += os.path.getsize(os.path.join(root, f))
     except OSError:
-        total = 0
+        return 0
+    return total
+
+
+def _partitions_for_bytes(
+    spark: SparkSession, total: int, target_bytes: int, floor: int
+) -> int:
+    batch_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if total == 0:
         # Non-local, unreadable or not-yet-written source (os.walk on a
         # missing path yields NOTHING rather than raising): keep the
@@ -137,9 +123,40 @@ def stream_shuffle_partitions(
     return min(derived, batch_default) if batch_default > 0 else derived
 
 
+def stream_sources(df: DataFrame) -> set[tuple[str, str]] | None:
+    """The distinct (path, pathGlobFilter) pairs of the file sources that
+    feed the streaming DataFrame ``df``, read from its analyzed plan — a
+    self-join over one source yields one pair. None when some streaming
+    leaf is not a file source with a path (rate, Kafka, memory): such a
+    query cannot be measured."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    sources = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        opts = leaf.dataSource().options()
+        path = opts.get("path")
+        if not path.isDefined():
+            return None
+        glob = opts.get("pathGlobFilter")
+        sources.add((path.get(), glob.get() if glob.isDefined() else "*"))
+    return sources
+
+
+def query_shuffle_partitions(df: DataFrame, floor: int = 4) -> int:
+    """``stream_shuffle_partitions`` for the query ``df`` would start: the
+    rule applied to the bytes of every distinct source in its plan."""
+    sources = stream_sources(df)
+    total = sum(_source_bytes(p, g) for p, g in sources) if sources else 0
+    return _partitions_for_bytes(df.sparkSession, total, _TARGET_BYTES, floor)
+
+
 def read_event_stream(
     spark: SparkSession, directory: str, glob: str = "events.parquet",
-    max_files_per_trigger: int = 1, partition_floor: int = 4
+    max_files_per_trigger: int = 1
 ) -> DataFrame:
     """Streaming file source over a directory of events parquet files.
     (File sources take a directory; ``glob`` selects the event files within.)
@@ -148,14 +165,9 @@ def read_event_stream(
     the files carry, so every downstream transformation (and its batch
     twin) sees one schema.
 
-    Scoped side effect: sets ``spark.sql.shuffle.partitions`` to
-    ``stream_shuffle_partitions(...)`` (floored at ``partition_floor``)
-    so the streaming query the caller is about to start plans its state
-    stores at the data-derived count — the conf is read at query-start
-    time. The previous batch value is snapshotted here; callers restore
-    it with ``restore_shuffle_partitions(spark)`` right after
-    ``.start()`` (safe: the query clones the session inside start), so
-    the mutation never outlives the query start.
+    The reader has no side effect on partition sizing: the query is
+    sized when it starts, by ``run_stream``, from the (directory, glob)
+    this source records in the plan.
 
     Like ``load_table`` it sets ``nanosAsLong`` itself (a plain session
     cannot read INT64 nanos files without it), and its ``ts`` probe goes
@@ -163,12 +175,6 @@ def read_event_stream(
     given set of files runs the inference job."""
     import os
 
-    save_batch_shuffle_conf(spark)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_shuffle_partitions(spark, directory, glob,
-                                      floor=partition_floor)),
-    )
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     probe = parquet_schema(spark, os.path.join(directory, glob))["ts"]
     nanos = probe.dataType.simpleString() == "bigint"
@@ -241,22 +247,66 @@ def session_aggregates(
     )
 
 
-def run_to_memory_sink(
-    stream_df: DataFrame, name: str, output_mode: str = "complete"
+# Upper bound on draining one availableNow query; a query still running
+# after it is stopped and reported as TimeoutError instead of wedging the
+# caller.
+STREAM_TIMEOUT_S = 600
+
+
+def run_stream(
+    df: DataFrame,
+    name: str,
+    *,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+    floor: int = 4,
+    available_now: bool = True,
 ) -> StreamingQuery:
-    """Drive a streaming aggregation into an in-memory table and process all
-    available input synchronously — the local smoke harness. Real sinks:
-    kafka / parquet-append / foreachBatch for exactly-once upserts."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    # The query snapshotted the session conf inside start(); give the
-    # caller's session its batch shuffle default back (r13).
-    restore_shuffle_partitions(stream_df.sparkSession)
-    q.processAllAvailable()
+    """Start ``df`` as the streaming query ``name`` — the one place the
+    package starts a stream.
+
+    1. Any active query called ``name`` in ``df``'s session is stopped.
+    2. The query's shuffle/state partition count comes from its own input
+       (``query_shuffle_partitions`` with ``floor``). A query is fixed
+       when it starts (it clones the session conf inside ``start()``), so
+       the conf is set around ``start()`` only and the caller's value is
+       put back in ``finally`` — also when ``start()`` raises.
+    3. The sink is ``foreach_batch`` when given, else a memory table named
+       ``name``; ``checkpoint`` sets the checkpoint location.
+    4. With ``available_now`` the query drains all available input and
+       terminates; one still running after ``STREAM_TIMEOUT_S`` is stopped
+       and raises ``TimeoutError``. Otherwise the started query is
+       returned as is and the caller drains it. A query failure raises
+       as ``StreamingQueryException``.
+
+    Resetting checkpoint and output directories stays with the caller:
+    a restart reuses a checkpoint on purpose."""
+    spark = df.sparkSession
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    writer = df.writeStream.outputMode(output_mode).queryName(name)
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    key = "spark.sql.shuffle.partitions"
+    caller_value = spark.conf.get(key)
+    spark.conf.set(key, str(query_shuffle_partitions(df, floor)))
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(key, caller_value)
+    if available_now and not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {name!r} did not drain within {STREAM_TIMEOUT_S} s"
+        )
     return q
 
 

@@ -16,7 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from . import events
+from .events import run_stream
 
 
 def recover(target_path: str) -> None:
@@ -128,15 +128,10 @@ def upsert_to_parquet(
             return
         merge_upsert(batch_df.sparkSession, target_path, batch_df, key)
 
-    q = (
-        stream_df.writeStream.foreachBatch(handle)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
+    return run_stream(
+        stream_df, query_name, output_mode=output_mode, foreach_batch=handle,
+        checkpoint=checkpoint, available_now=False,
     )
-    events.restore_shuffle_partitions(stream_df.sparkSession)
-    return q
 
 
 def streaming_kmv_signature(
@@ -185,11 +180,5 @@ def streaming_kmv_signature(
             merged.collect(), "g string, h string"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    events.restore_shuffle_partitions(stream.sparkSession)
-    q.awaitTermination()
+    run_stream(stream, "kmv_signature", foreach_batch=merge)
     return state

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from . import events as _events_mod
+from .events import run_stream
 
 OUTPUT_SCHEMA = (
     "user_id long, event_id long, value double, running_mean double, flagged boolean"
@@ -482,13 +482,7 @@ def running_anomaly_flags_scalable(
             marker=_replay_marker(checkpoint, batch_id, token=token),
         )
 
-    q = (
-        events.select("user_id", "event_id", "value")
-        .writeStream.foreachBatch(handle)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
+    return run_stream(
+        events.select("user_id", "event_id", "value"), query_name,
+        foreach_batch=handle, checkpoint=checkpoint, available_now=False,
     )
-    _events_mod.restore_shuffle_partitions(events.sparkSession)
-    return q
