@@ -20,8 +20,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from usedcars_bigdata_spark.operators.window import entry_scope  # noqa: E402
 from usedcars_bigdata_spark.plans import QUERIES  # noqa: E402
-from usedcars_bigdata_spark.session import get_session  # noqa: E402
+from usedcars_bigdata_spark.session import default_parallelism, get_session  # noqa: E402
 from usedcars_bigdata_spark.sources import load_table  # noqa: E402
 
 # Bench coverage is derived from the registry: EVERY entry in QUERIES is
@@ -112,7 +113,12 @@ def _env_fingerprint() -> dict:
                 continue
     except OSError:
         n_java = -1
-    return {"load1": round(load1, 2), "load5": round(load5, 2), "n_java": n_java}
+    return {
+        "cpus": default_parallelism(),
+        "load1": round(load1, 2),
+        "load5": round(load5, 2),
+        "n_java": n_java,
+    }
 
 
 def time_isolated(name: str, sf_dir: str) -> float:
@@ -137,36 +143,17 @@ def time_isolated(name: str, sf_dir: str) -> float:
 
 
 def time_query(spark, sf_dir: str, name: str) -> float:
-    # Stream entries size their own query inside streaming.events.run_stream,
-    # which puts the session's value back after start(); restoring it here
-    # too keeps batch entries planning at the engine default even if an
-    # entry changes the conf some other way (same per-entry hygiene as
-    # clearCache below).
-    default_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    # entry_scope restores the shuffle conf, drains the operators' hub
+    # registry and clears the CacheManager on exit, also when the entry
+    # raises: entries are independent, so a hub one entry persist()ed must
+    # not occupy storage memory while the next 400 run (the r8 bench
+    # measured 110 entries drifting up once the two-pass window operators
+    # started persisting their bucket frames for the life of the JVM).
+    with entry_scope(spark):
         t0 = time.time()
-        df = QUERIES[name](spark, sf_dir)
-        n = df.count()
+        n = QUERIES[name](spark, sf_dir).count()
         dt = time.time() - t0
         assert n >= 0
-    finally:
-        # try/finally (r13, ADVICE r12): a raising entry must not leak a
-        # stream-sized conf or a persisted hub into the next entry for a
-        # caller that catches and continues.
-        spark.conf.set("spark.sql.shuffle.partitions", default_sp)
-        # Per-entry cache hygiene: entries are independent, so a hub one
-        # entry persist()ed must not occupy storage memory while the next
-        # 400 run — the r8 bench measured 110 entries drifting up once the
-        # two-pass window operators started persisting their bucket frames
-        # for the life of the JVM. clearCache() ends the cross-entry
-        # contamination; the inside-an-entry cache reuse these hubs exist
-        # for has already happened by the time count() returns.
-        # release_hubs() additionally empties the operators' hub registry so
-        # the Python-side references don't pin re-persistable plans (r9).
-        from usedcars_bigdata_spark.operators.window import release_hubs
-
-        release_hubs()
-        spark.catalog.clearCache()
     return dt
 
 

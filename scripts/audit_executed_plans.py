@@ -52,7 +52,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from usedcars_bigdata_spark.operators.window import release_hubs
+    from usedcars_bigdata_spark.operators.window import entry_scope
     from usedcars_bigdata_spark.plans import QUERIES
     from usedcars_bigdata_spark.plantools import single_partition_funnel_sites
 
@@ -84,20 +84,15 @@ def main() -> int:
         t0 = time.time()
         failed = False
         try:
-            QUERIES[name](spark, sf_dir).toPandas()
+            with entry_scope(spark):
+                QUERIES[name](spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"ERR   {name}: {type(e).__name__}")
             errored.append(name)
             failed = True
-        finally:
-            release_hubs()
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
         if failed:
             # Drain whatever the failed entry DID execute (plus the
-            # release/clearCache actions above) so its plans are not
+            # cleanup entry_scope ran on exit) so its plans are not
             # attributed to the NEXT entry — a real funnel could be
             # flagged under the wrong name or silently pass under the
             # next entry's declared exemption (r11 ADVICE).

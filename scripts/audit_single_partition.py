@@ -31,7 +31,7 @@ spark = get_session(shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 
 from usedcars_bigdata_spark.plans import QUERIES  # noqa: E402
-from usedcars_bigdata_spark.operators.window import release_hubs  # noqa: E402
+from usedcars_bigdata_spark.operators.window import entry_scope  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -53,16 +53,14 @@ for name, fn in QUERIES.items():
     if name.startswith(SKIP_PREFIXES):
         continue
     try:
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        with entry_scope(spark):
+            plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
     except Exception as e:  # noqa: BLE001
         # an entry whose plan won't build is UNAUDITED — that must fail
         # the run, or the "no undeclared funnels" claim silently skips it
         print(f"ERR   {name}: {type(e).__name__}")
         errored.append(name)
         continue
-    finally:
-        release_hubs()
-        spark.catalog.clearCache()
     for consumer in single_partition_funnel_sites(plan):
         tag = "declared" if name in DECLARED else "FLAG"
         print(f"{tag:9s} {name}: {consumer[:140]}")

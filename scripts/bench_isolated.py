@@ -2,7 +2,7 @@
 """Isolated-JVM timing for individual contract queries — the
 methodologically careful complement to bench.py (which times everything
 in one long-lived JVM, where heap growth/GC from earlier queries bleeds
-into later timings; see scale_probe_dedup.py's measured 3-5x same-JVM
+into later timings; see scripts/probe.py's measured 3-5x same-JVM
 inflation).
 
 Each query runs in its OWN subprocess: fresh session, one unrecorded

@@ -98,6 +98,7 @@ def main() -> int:
     oracles = entry.oracle_sql()
 
     con = duckdb.connect()
+    from usedcars_bigdata_spark.operators.window import entry_scope
     from usedcars_bigdata_spark.schemas import TABLE_NAMES
 
     for t in TABLE_NAMES:
@@ -112,8 +113,13 @@ def main() -> int:
     failures: list[str] = []
     for name in names:
         t0 = time.time()
+        # entry_scope (shuffle conf, hub registry, CacheManager) per entry:
+        # a 408-entry sweep would otherwise accumulate the two-pass
+        # operators' persisted bucket hubs in the storage region, and a
+        # dead session still records the entry's FAIL and keeps sweeping.
         try:
-            got = queries[name](spark, sf_dir).toPandas()
+            with entry_scope(spark):
+                got = queries[name](spark, sf_dir).toPandas()
             if name not in oracles:
                 print(f"  rows-only {name}: {len(got)} rows ({time.time()-t0:.2f}s)")
                 continue
@@ -162,20 +168,6 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL err  {name}:")
             traceback.print_exc(limit=3)
-        finally:
-            # Per-entry cache hygiene (r9): the two-pass window operators
-            # persist() bucket hubs that the CacheManager holds for the
-            # life of the JVM; a 408-entry sweep would otherwise
-            # accumulate them into the storage region. Guarded like
-            # release_hubs: a dead session must record the entry's FAIL
-            # and keep sweeping, not abort the run from the finally.
-            from usedcars_bigdata_spark.operators.window import release_hubs
-
-            release_hubs()
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
 
     print(f"\n{len(names) - len(failures)}/{len(names)} green; failures: {failures}")
     return 1 if failures else 0

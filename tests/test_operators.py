@@ -258,6 +258,53 @@ def test_two_pass_hubs_register_and_release(spark):
     assert W2.release_hubs() == 1
 
 
+def test_entry_scope_cleans_up_after_a_raising_body(spark):
+    """entry_scope restores the shuffle conf, drains the hub registry and
+    empties the CacheManager on exit, also when the body raises, and the
+    body's own exception is the one that propagates."""
+    from usedcars_bigdata_spark.operators import window as W2
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(RuntimeError, match="entry failed"):
+        with W2.entry_scope(spark):
+            spark.conf.set("spark.sql.shuffle.partitions", "3")
+            W2.register_hub(spark.range(10).persist()).count()
+            assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+            raise RuntimeError("entry failed")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert not W2._PERSISTED_HUBS
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_entry_scope_keeps_the_body_error_when_cleanup_fails():
+    """With a dead session every cleanup step raises: each is still
+    tried, in order, and the body's exception is the one that
+    propagates, not a secondary one from cleanup."""
+    from types import SimpleNamespace
+
+    from usedcars_bigdata_spark.operators import window as W2
+
+    tried = []
+
+    def dead(step):
+        def call(*_):
+            tried.append(step)
+            raise RuntimeError("session stopped")
+
+        return call
+
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda _key: "8", set=dead("conf")),
+        catalog=SimpleNamespace(clearCache=dead("clearCache")),
+    )
+    W2.register_hub(SimpleNamespace(unpersist=dead("unpersist")))
+    with pytest.raises(ValueError, match="entry failed"):
+        with W2.entry_scope(spark):
+            raise ValueError("entry failed")
+    assert tried == ["conf", "unpersist", "clearCache"]
+    assert not W2._PERSISTED_HUBS
+
+
 def test_global_row_number_and_zip_index(tiny):
     g = W.global_row_number(tiny, [F.col("id").desc()])
     assert [r["id"] for r in g.orderBy("row_num").collect()] == [5, 4, 3, 2, 1]

@@ -445,7 +445,7 @@ def ivf_topk(
     # vectors / 141 centroids (the sqrt(N) sizing rule) where execution
     # is milliseconds; the r10 ANN 100× probe caught it. A 256-row
     # createDataFrame broadcast carries the same geometry with a
-    # constant-size plan (probe_ann_100x.py: 62s → ~3s at the same size).
+    # constant-size plan (scripts/probe.py ann: 62s → ~3s at the same size).
     cents_df = F.broadcast(
         corpus.sparkSession.createDataFrame(
             [(i, [float(x) for x in c]) for i, c in enumerate(cents)],

@@ -17,7 +17,6 @@ def pagerank_unrolled(
     iterations: int = 3,
     damping: float = 0.85,
     ndigits: int = 8,
-    edge_storage: str = "memory",
 ) -> DataFrame:
     """PageRank with a FIXED number of unrolled iterations — one declarative
     plan, no driver-side loop state, no collect. Each iteration is
@@ -38,24 +37,12 @@ def pagerank_unrolled(
     symmetric edge sets like co-occurrence graphs; a general deployment
     adds the dangling-mass redistribution term).
 
-    ``edge_storage``: "memory" (default — MEMORY_AND_DISK local
-    checkpoint, right for harness-scale graphs) or "disk" (DISK_ONLY —
-    the 100x-regime lever: the r7 probe found the 36M-edge checkpoint
-    pinning the single-box heap and driving GCLocker retry storms; on a
-    cluster this is the executor-memory axis, on one box spilling the
-    edge blocks to disk trades ~one re-read per round for a quiet heap).
-
     Output: (node, pr) — pr rounded to ``ndigits`` (per-node contribution
     sums accumulate in engine-specific order; at rank magnitudes ~1/N the
     FP spread is ~1e-15, far below the rounding grid)."""
-    from pyspark import StorageLevel
-
-    level = (
-        StorageLevel.DISK_ONLY if edge_storage == "disk" else None
-    )
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True, storageLevel=level)
+    ).localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count("*").alias("d"))
     n = deg.agg(F.count("*").alias("n"))
     ranks = deg.crossJoin(F.broadcast(n)).select(

@@ -277,8 +277,8 @@ def holt_trend(
     per-row Python loop bounded throughput at ~1.5M rows/s/core; this
     form is bounded by max series length, not row count: 17.0M
     rows/s/core on a 20k-key x 50-step batch, 11.4x the per-row loop;
-    scripts/probe_smoother_throughput.py, docs/SCALING.md round-5
-    probe). Expressions are element-wise
+    ``scripts/probe.py smoother --sizes 20000 --cells holt``,
+    docs/SCALING.md round-5 probe). Expressions are element-wise
     identical IEEE doubles in identical per-key order, so outputs are
     BITWISE unchanged — the DuckDB recursive-CTE parity and the
     stream==batch pin survive the rewrite untouched. State is 3 scalars
@@ -1115,8 +1115,8 @@ def holt_winters_additive(
     identical per-key order => outputs BITWISE unchanged vs the scalar
     loop; throughput is bounded by max series length, not row count
     (9.7M rows/s/core measured on a 20k-key x 50-step batch, vs 0.85M
-    for the per-row loop, 11.4x; scripts/probe_smoother_throughput.py,
-    docs/SCALING.md round-5 probe). State is
+    for the per-row loop, 11.4x; ``scripts/probe.py smoother --sizes
+    20000 --cells holt_winters``, docs/SCALING.md round-5 probe). State is
     O(season) floats per key per partition.
 
     Output: (key, rn, value, level, trend, seasonal)."""

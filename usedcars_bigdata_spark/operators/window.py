@@ -11,7 +11,9 @@ bit-identical to the window forms — the r8 scale path).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import logging
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,10 +24,10 @@ from pyspark.sql import functions as F
 # JVM — unlike localCheckpoint blocks it is NEVER GC-released, so a
 # long-lived session that calls these operators per query accumulates
 # data-sized cache entries (the r7 pagerank heap-pressure failure mode).
-# Every hub is registered here; harnesses (bench.py, driver_sim) call
-# ``release_hubs()`` after materializing each entry, and library callers
-# should do the same once the returned frame is consumed. clearCache()
-# also works but nukes unrelated caches.
+# Every hub is registered here; harnesses run each entry inside
+# ``entry_scope``, which calls ``release_hubs()`` on exit, and library
+# callers should call ``release_hubs()`` once the returned frame is
+# consumed. clearCache() also works but nukes unrelated caches.
 _PERSISTED_HUBS: list[DataFrame] = []
 
 
@@ -72,6 +74,32 @@ def release_hubs(blocking: bool = False) -> int:
             pass  # session already stopped — nothing to release
         n += 1
     return n
+
+
+@contextmanager
+def entry_scope(spark) -> Iterator[None]:
+    """Per-entry cleanup for a harness that runs many entries in one
+    session. On exit, also when the body raises, it (1) restores
+    ``spark.sql.shuffle.partitions`` to its value on entry, (2) calls
+    ``release_hubs()`` and (3) clears the CacheManager, so no entry
+    leaks conf, hubs or cached plans into the next. Each step is
+    guarded: after a session died inside the body, the body's own
+    exception propagates, not a secondary one raised from cleanup."""
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        yield
+    finally:
+        for step in (
+            lambda: spark.conf.set("spark.sql.shuffle.partitions", partitions),
+            release_hubs,
+            lambda: spark.catalog.clearCache(),
+        ):
+            try:
+                step()
+            except Exception:  # a dead session: report, keep the sweep going
+                logging.getLogger(__name__).warning(
+                    "entry_scope cleanup step failed", exc_info=True
+                )
 
 
 def global_row_number(df: DataFrame, order_by: Sequence[Column | str], alias: str = "row_num") -> DataFrame:
