@@ -749,19 +749,15 @@ def _fresh_dir(tag: str) -> str:
 
 
 def _to_parquet(spark, out_df, tag: str) -> dict:
-    """availableNow run to a parquet sink: a memory sink collects every
-    output row to the driver, and the 100× agg's ~9.5M rows exceeded
-    spark.driver.maxResultSize. run_stream has no parquet sink, so the
-    query is sized here by the same rule (the source bytes in its plan)."""
-    from usedcars_bigdata_spark.streaming.events import query_shuffle_partitions
+    """Run ``out_df`` through run_stream with a foreachBatch parquet
+    append: a memory sink collects every output row to the driver, and
+    the 100× agg's ~9.5M rows exceeded spark.driver.maxResultSize."""
+    from usedcars_bigdata_spark.streaming.events import run_stream
 
-    spark.conf.set("spark.sql.shuffle.partitions", str(query_shuffle_partitions(out_df)))
     root = _fresh_dir(tag)
     t0 = time.perf_counter()
-    q = (out_df.writeStream.outputMode("append").format("parquet")
-         .option("path", f"{root}/out").option("checkpointLocation", f"{root}/ck")
-         .queryName(f"probe_{tag}").trigger(availableNow=True).start())
-    q.awaitTermination()
+    q = run_stream(out_df, f"probe_{tag}", checkpoint=f"{root}/ck",
+                   foreach_batch=lambda b, _: b.write.mode("append").parquet(f"{root}/out"))
     wall = time.perf_counter() - t0
     return {"wall_s": round(wall, 1), "rows_out": spark.read.parquet(f"{root}/out").count(),
             **_state_summary(q)}
@@ -773,11 +769,8 @@ def _foreach_batch(spark, start, tag: str) -> dict:
     t0 = time.perf_counter()
     q = start(state_dir=f"{root}/state", out_dir=f"{root}/out",
               checkpoint=f"{root}/ck", query_name=f"probe_{tag}")
-    q.processAllAvailable()
     wall = time.perf_counter() - t0
-    batches = len(q.recentProgress)
-    q.stop()
-    return {"wall_s": round(wall, 1), "batches": batches,
+    return {"wall_s": round(wall, 1), "batches": len(q.recentProgress),
             "state_rows": spark.read.parquet(f"{root}/state").count(),
             "rows_out": spark.read.parquet(f"{root}/out").count()}
 
@@ -839,18 +832,17 @@ def stream(spark, n: int, cell: str) -> dict:
     assert which == "neardup", cell
     from usedcars_bigdata_spark.sources import load_table
     from usedcars_bigdata_spark.streaming.dedup import streaming_near_dup_flags
+    from usedcars_bigdata_spark.streaming.events import write_replay_source
 
-    src = f"{BASE}/stream_docs_{n}x"
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-        dmax = docs.agg(F.max("doc_id")).first()[0] + 1
-        big = replicate(docs, n, ["doc_id"])
-        base_id = F.col("doc_id") % SHIFT
-        # three files, one per trigger: each a third of every copy's ids
-        for lo, hi in ((0, dmax // 3), (dmax // 3, 2 * dmax // 3), (2 * dmax // 3, dmax)):
-            (big.filter((base_id >= lo) & (base_id < hi))
-             .coalesce(1).write.mode("append").parquet(src))
-            time.sleep(1.1)
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    dmax = docs.agg(F.max("doc_id")).first()[0] + 1
+    big = replicate(docs, n, ["doc_id"])
+    base_id = F.col("doc_id") % SHIFT
+    # three files, one per trigger: each a third of every copy's ids
+    src = write_replay_source(f"{BASE}/stream_docs_{n}x", [
+        big.filter((base_id >= lo) & (base_id < hi)).coalesce(1)
+        for lo, hi in ((0, dmax // 3), (dmax // 3, 2 * dmax // 3), (2 * dmax // 3, dmax))
+    ])
     docs_stream = (spark.readStream.schema("doc_id long, text string")
                    .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
                    .parquet(src))

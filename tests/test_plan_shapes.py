@@ -316,13 +316,11 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     the scan's PartitionFilters carries the o_year predicate, so at scale
     only one year's directories are planned."""
     import os
-    import tempfile
+
+    from usedcars_bigdata_spark.plans.registry import scratch_dir
 
     QUERIES["rel_partitioned_prune"](spark, sf_dir).collect()  # writes layout
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"usedcars_partitioned_orders_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir(spark, sf_dir, "partitioned_orders")
     back = spark.read.parquet(out).filter(F.col("o_year") == 1996)
     plan = plan_of(back.groupBy("o_orderpriority").count())
     part_meta = plan.split("PartitionFilters")[-1]

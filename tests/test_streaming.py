@@ -4,6 +4,9 @@ result once all input is processed."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 from usedcars_bigdata_spark.sources import load_table
@@ -190,10 +193,7 @@ def test_scalable_anomaly_flags_matches_batch_twin(spark, sf_dir, batch_events, 
         checkpoint=str(tmp_path / "ck"),
         query_name="anom_scal_test",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    assert not q.isActive
     got = spark.read.parquet(str(tmp_path / "out")).withColumn(
         "rm", F.round("running_mean", 6)
     )
@@ -241,10 +241,7 @@ def test_scalable_anomaly_multibatch_equals_python_fold(spark, sf_dir, batch_eve
         checkpoint=str(tmp_path / "ck"),
         query_name="anom_scal_mb",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    assert not q.isActive
     got = spark.read.parquet(str(tmp_path / "out"))
     q2 = SE.run_stream(
         ST.running_anomaly_flags(stream), "anom_fold_mb", output_mode="append"
@@ -258,56 +255,32 @@ def test_scalable_anomaly_multibatch_equals_python_fold(spark, sf_dir, batch_eve
         q2.stop()
 
 
-def test_stream_shuffle_partitions_scale_adaptive(spark, tmp_path):
+def test_stream_shuffle_partitions_scale_adaptive(spark):
     """r12 optimization: streaming queries size their shuffle/state
     partitioning to the SOURCE bytes (~64 MiB per partition, floor 4,
     capped at the session batch default) instead of inheriting the
     cores-sized batch default — state stores are a per-partition,
     per-micro-batch commit cost. Pins the derivation rule's edges:
-    tiny source → floor; unmeasurable source → batch default (never
-    the local floor, which would serialize a production stream);
-    big source → bytes-derived but capped."""
-    from usedcars_bigdata_spark.streaming.events import (
-        stream_shuffle_partitions,
-    )
-
+    tiny source → floor; per-operator floor; unmeasurable source →
+    batch default (never the local floor, which would serialize a
+    production stream); big source → bytes-derived but capped."""
+    rule = SE._partitions_for_bytes
+    mib64 = 64 << 20
     batch_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert batch_default < 12  # so the 12-span source below hits the cap
 
-    # tiny local source → the compute-parallelism floor (a tmp_path
-    # source of known size, NOT the sf_dir fixture: at a larger sf dir
-    # events.parquet can exceed one target span and the assert would
-    # fail for environment reasons — ADVICE r12)
-    tiny = tmp_path / "tiny"
-    tiny.mkdir()
-    (tiny / "one.bin").write_bytes(b"\0" * 1024)
-    assert stream_shuffle_partitions(spark, str(tiny), "*.bin") == 4
-
+    # tiny source → the compute-parallelism floor
+    assert rule(spark, 1024, 4) == 4
     # per-operator-type floor (r13): compute-heavy operators pass a
     # higher floor; still capped at the batch default
-    assert stream_shuffle_partitions(
-        spark, str(tiny), "*.bin", floor=8
-    ) == min(8, batch_default)
-
-    # unmeasurable source (missing path: os.walk yields nothing) →
+    assert rule(spark, 1024, 8) == min(8, batch_default)
+    # unmeasurable source (0 bytes: missing, non-local or unreadable) →
     # batch default, NOT the floor
-    assert (
-        stream_shuffle_partitions(spark, str(tmp_path / "nope"), "*")
-        == batch_default
-    )
-
-    # bytes-derived: 3 files x 1 MiB at target 1 MiB → 3, floored to 4;
-    # at target 256 KiB → 12, capped at the batch default
-    d = tmp_path / "src"
-    d.mkdir()
-    for i in range(3):
-        (d / f"f{i}.bin").write_bytes(b"\0" * (1 << 20))
-    assert stream_shuffle_partitions(
-        spark, str(d), "*.bin", target_bytes=1 << 20
-    ) == 4
-    capped = stream_shuffle_partitions(
-        spark, str(d), "*.bin", target_bytes=256 << 10
-    )
-    assert capped == min(12, batch_default)
+    assert rule(spark, 0, 4) == batch_default
+    # bytes-derived: 3 spans of 64 MiB → 3, floored to 4; 12 spans → 12,
+    # capped at the batch default
+    assert rule(spark, 3 * mib64, 4) == 4
+    assert rule(spark, 12 * mib64, 4) == batch_default
 
 
 def test_stream_conf_scoped_to_query_start(spark, sf_dir):
@@ -382,6 +355,58 @@ def test_run_stream_times_out(spark, sf_dir, monkeypatch):
     assert all(q.name != "slow_sink" for q in spark.streams.active)
 
 
+def test_foreach_batch_helper_times_out_and_stops(spark, tmp_path, monkeypatch):
+    """A foreachBatch helper drains through run_stream's bounded
+    availableNow too: an upsert whose merge blocks past STREAM_TIMEOUT_S
+    raises TimeoutError and leaves no query running."""
+    import time
+
+    from usedcars_bigdata_spark.streaming import sinks as SK
+
+    monkeypatch.setattr(SE, "STREAM_TIMEOUT_S", 1)
+    monkeypatch.setattr(SK, "merge_upsert", lambda *a, **k: time.sleep(5))
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    with pytest.raises(TimeoutError):
+        SK.upsert_to_parquet(
+            stream, str(tmp_path / "target"), key="id",
+            checkpoint=str(tmp_path / "ck"), query_name="blocked_upsert",
+        )
+    assert all(q.name != "blocked_upsert" for q in spark.streams.active)
+
+
+def test_replay_source_ascends_and_is_written_once(spark, tmp_path):
+    """write_replay_source gives one file per micro-batch with strictly
+    ascending mtimes in batch order (list order, then partition order
+    within a range-partitioned batch), and a second call writes nothing."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "replay")
+    ranged = spark.range(300).repartitionByRange(3, "id")
+    tail = spark.range(300, 310).coalesce(1)
+    assert SE.write_replay_source(src, [ranged, tail]) == src
+    files = sorted(glob.glob(os.path.join(src, "*.parquet")), key=os.path.getmtime)
+    assert len(files) == 4
+    mtimes = [os.stat(f).st_mtime_ns for f in files]
+    assert mtimes == sorted(set(mtimes))  # strictly ascending
+    bounds = [
+        spark.read.parquet(f).agg(F.min("id"), F.max("id")).first()
+        for f in files
+    ]
+    assert all(a[1] < b[0] for a, b in zip(bounds, bounds[1:])), bounds
+    assert bounds[-1] == (300, 309)
+
+    def snapshot():
+        return {
+            f: os.stat(os.path.join(src, f)).st_mtime_ns for f in os.listdir(src)
+        }
+
+    before = snapshot()
+    SE.write_replay_source(src, [spark.range(5)])
+    assert snapshot() == before
+
+
 def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
     """The runner's count comes from the sources in the query's plan and
     equals the byte rule over that (dir, glob): for read_event_stream, for
@@ -393,12 +418,11 @@ def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
 
     events = SE.read_event_stream(spark, sf_dir)
     assert SE.stream_sources(events) == {(sf_dir, "events.parquet")}
+    events_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     for floor in (4, 8):
         assert SE.query_shuffle_partitions(
             events, floor
-        ) == SE.stream_shuffle_partitions(
-            spark, sf_dir, "events.parquet", floor=floor
-        )
+        ) == SE._partitions_for_bytes(spark, events_bytes, floor)
 
     src = str(tmp_path / "raw")
     spark.range(100).write.parquet(src)
@@ -408,8 +432,11 @@ def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     assert SE.stream_sources(raw) == {(src, "*.parquet")}
-    assert SE.query_shuffle_partitions(raw) == SE.stream_shuffle_partitions(
-        spark, src, "*.parquet"
+    raw_bytes = sum(
+        os.path.getsize(f) for f in glob.glob(os.path.join(src, "*.parquet"))
+    )
+    assert SE.query_shuffle_partitions(raw) == SE._partitions_for_bytes(
+        spark, raw_bytes, 4
     )
 
     joined = clicks_to_purchases(
@@ -428,9 +455,13 @@ def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
 
 
 def test_only_run_stream_starts_streams():
-    """Structural guard: in the package, ``.writeStream`` is touched only
-    inside streaming.events.run_stream, and nothing under plans/ or
-    streaming/ sets spark.sql.shuffle.partitions except run_stream."""
+    """Structural guard for the one stream lifecycle: in the package,
+    ``.writeStream`` is touched only inside streaming.events.run_stream,
+    and nothing under plans/ or streaming/ sets
+    spark.sql.shuffle.partitions except run_stream; no code drains a
+    query by hand (``processAllAvailable``) or keeps one running
+    (``available_now``); plans/ never sleeps to order replay files, and
+    only ``scratch_dir`` names a temp directory there."""
     import ast
     import pathlib
 
@@ -438,7 +469,7 @@ def test_only_run_stream_starts_streams():
 
     root = pathlib.Path(usedcars_bigdata_spark.__file__).parent
     key = "spark.sql.shuffle.partitions"
-    writers, setters = [], []
+    writers, setters, drains, sleeps, tempdirs = [], [], [], [], []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         tree = ast.parse(path.read_text())
@@ -453,6 +484,14 @@ def test_only_run_stream_starts_streams():
             if isinstance(node, ast.Attribute) and node.attr == "writeStream":
                 writers.append(where)
             if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "processAllAvailable"
+            ) or (
+                isinstance(node, (ast.arg, ast.keyword))
+                and node.arg == "available_now"
+            ):
+                drains.append(where)
+            if (
                 rel.startswith(("plans/", "streaming/"))
                 and isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
@@ -464,6 +503,15 @@ def test_only_run_stream_starts_streams():
                 )
             ):
                 setters.append(where)
+            if rel.startswith("plans/") and isinstance(node, ast.Call):
+                func = ast.unparse(node.func)
+                if func.endswith("sleep"):
+                    sleeps.append(where)
+                if func.endswith("gettempdir"):
+                    tempdirs.append(where)
     runner = ("streaming/events.py", "run_stream")
     assert writers and set(writers) == {runner}, writers
     assert set(setters) <= {runner}, setters
+    assert drains == [], drains
+    assert sleeps == [], sleeps
+    assert tempdirs == [("plans/registry.py", "scratch_dir")], tempdirs

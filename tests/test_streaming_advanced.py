@@ -4,7 +4,6 @@ and the foreachBatch exactly-once upsert sink."""
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,28 +72,31 @@ def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path):
 
 
 def test_foreachbatch_upsert_sink(spark, sf_dir, tmp_path):
+    """The upsert sink drains what is there and terminates; input
+    appended afterwards lands when the query restarts on the same
+    checkpoint, updating key 1 and inserting key 3."""
     target = str(tmp_path / "target")
     src = str(tmp_path / "upsert_src")
+
+    def drain():
+        stream = SE.read_event_stream(spark, src, glob="*.parquet").select(
+            "event_id", "user_id", "value"
+        )
+        q = SK.upsert_to_parquet(
+            stream, target, key="event_id", checkpoint=str(tmp_path / "ck2")
+        )
+        assert not q.isActive
+        return {
+            r["event_id"]: r["value"] for r in spark.read.parquet(target).collect()
+        }
+
     _write_events(spark, src, [(1, _ns(0), 10, "view", 1.0, "{}"),
                                (2, _ns(1), 20, "view", 2.0, "{}")])
-    stream = SE.read_event_stream(spark, src, glob="*.parquet").select(
-        "event_id", "user_id", "value"
-    )
-    q = SK.upsert_to_parquet(
-        stream, target, key="event_id", checkpoint=str(tmp_path / "ck2")
-    )
-    try:
-        q.processAllAvailable()
-        first = {r["event_id"]: r["value"] for r in spark.read.parquet(target).collect()}
-        assert first == {1: 1.0, 2: 2.0}
-        # second batch: update key 1, insert key 3
-        _write_events(spark, src, [(1, _ns(2), 10, "view", 9.0, "{}"),
-                                   (3, _ns(3), 30, "view", 3.0, "{}")])
-        q.processAllAvailable()
-        second = {r["event_id"]: r["value"] for r in spark.read.parquet(target).collect()}
-        assert second == {1: 9.0, 2: 2.0, 3: 3.0}
-    finally:
-        q.stop()
+    assert drain() == {1: 1.0, 2: 2.0}
+    # second batch: update key 1, insert key 3
+    _write_events(spark, src, [(1, _ns(2), 10, "view", 9.0, "{}"),
+                               (3, _ns(3), 30, "view", 3.0, "{}")])
+    assert drain() == {1: 9.0, 2: 2.0, 3: 3.0}
 
 
 def test_merge_upsert_idempotent(spark, tmp_path):
@@ -322,10 +324,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
         )
 
     q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    assert not q.isActive
     assert {
         r["event_id"]: r["value"] for r in spark.read.parquet(target).collect()
     } == {1: 1.0, 2: 2.0}
@@ -333,10 +332,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     # input appended while the query is DOWN
     _write_events(spark, src, [(3, _ns(2), 30, "view", 3.0, "{}")])
     q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    assert not q2.isActive
     got = {r["event_id"]: r["value"] for r in spark.read.parquet(target).collect()}
     # keys 1/2 exactly once (not re-merged as duplicates), key 3 arrived
     assert got == {1: 1.0, 2: 2.0, 3: 3.0}
@@ -429,18 +425,15 @@ def test_streaming_near_dup_equals_batch_lsh_rule(spark, sf_dir, tmp_path):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = str(tmp_path / "docs_src")
-    # Three id-ordered files written SEQUENTIALLY: the file source orders
-    # micro-batches by modification time, so simultaneous writes (one
-    # repartitionByRange save) would randomize arrival order and break
-    # the monotone-arrival premise of the batch-equality check.
-    import time as _time
-
+    # Three id-ordered files with ascending mtimes: the file source
+    # orders micro-batches by modification time, and the batch-equality
+    # check rests on monotone arrival.
     n_docs = docs.count()
-    for lo, hi in [(0, n_docs // 3), (n_docs // 3, 2 * n_docs // 3),
-                   (2 * n_docs // 3, n_docs + 10**9)]:
-        (docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-             .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
+    SE.write_replay_source(src, [
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(1)
+        for lo, hi in [(0, n_docs // 3), (n_docs // 3, 2 * n_docs // 3),
+                       (2 * n_docs // 3, n_docs + 10**9)]
+    ])
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -454,11 +447,8 @@ def test_streaming_near_dup_equals_batch_lsh_rule(spark, sf_dir, tmp_path):
         out_dir=str(tmp_path / "flags"),
         checkpoint=str(tmp_path / "ck"),
     )
-    try:
-        q.processAllAvailable()
-        assert len(q.recentProgress) >= 3
-    finally:
-        q.stop()
+    assert not q.isActive
+    assert len(q.recentProgress) >= 3
 
     got = {
         r.doc_id: r.is_near_dup
@@ -490,8 +480,6 @@ def test_streaming_holt_winters_equals_batch(spark, sf_dir, tmp_path):
     equal the batch operator on the full series — the recurrence's state
     genuinely survives the batch boundaries and a restart-shaped state
     round-trip through parquet."""
-    import time as _time
-
     from usedcars_bigdata_spark.operators.timeseries import (
         holt_winters_additive,
     )
@@ -509,10 +497,10 @@ def test_streaming_holt_winters_equals_batch(spark, sf_dir, tmp_path):
 
     span = (hi - lo) / 3
     cuts = [(lo + span * i, lo + span * (i + 1) + (dt.timedelta(days=999) if i == 2 else dt.timedelta(0))) for i in range(3)]
-    for a, b in cuts:
-        (hourly.filter((F.col("b") >= a) & (F.col("b") < b))
-               .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
+    SE.write_replay_source(src, [
+        hourly.filter((F.col("b") >= a) & (F.col("b") < b)).coalesce(1)
+        for a, b in cuts
+    ])
 
     stream = (
         spark.readStream.schema("event_type string, b timestamp, x double")
@@ -529,11 +517,8 @@ def test_streaming_holt_winters_equals_batch(spark, sf_dir, tmp_path):
         order_col="b",
         value_col="x",
     )
-    try:
-        q.processAllAvailable()
-        assert len(q.recentProgress) >= 3
-    finally:
-        q.stop()
+    assert not q.isActive
+    assert len(q.recentProgress) >= 3
 
     got = sorted(
         (r.event_type, r.rn, r.x, r.level, r.trend, r.seasonal)
@@ -552,12 +537,11 @@ def test_streaming_holt_winters_equals_batch(spark, sf_dir, tmp_path):
 def test_streaming_sessionize_equals_batch_closed_sessions(spark, tmp_path):
     """streaming_sessionize == batch twin (gap sessions minus each user's
     open last session) across genuinely separate micro-batches, with a
-    session spanning the batch boundary. Files are written sequentially
-    (distinct mtimes) because the file source orders same-mtime files
+    session spanning the batch boundary. The replay files carry distinct
+    ascending mtimes because the file source orders same-mtime files
     nondeterministically — the round-5 lesson behind the entry's
-    sequential source prep."""
+    stamped source."""
     import datetime as dt
-    import time
 
     from pyspark.sql import functions as F
 
@@ -577,13 +561,10 @@ def test_streaming_sessionize_equals_batch_closed_sessions(spark, tmp_path):
     # file 3: session D (closes C); u2 session 2 (closes u2's first)
     f3 = [(1, t0 + 300 * m, 7), (2, t0 + 300 * m, 8)]
     src = str(tmp_path / "src")
-    batch_rows = []
-    for rows in (f1, f2, f3):
-        batch_rows += rows
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.05)
+    batch_rows = f1 + f2 + f3
+    SE.write_replay_source(
+        src, [spark.createDataFrame(rows, schema).coalesce(1) for rows in (f1, f2, f3)]
+    )
 
     stream = streaming_sessionize(
         spark.readStream.schema(schema)
@@ -639,7 +620,6 @@ def test_stream_left_outer_join_matched_and_null_rows(spark, tmp_path):
     within the gap AND only once the watermark has provably passed
     click_ts + gap; no click emits both a match and a null row."""
     import datetime as dt
-    import time
 
     from pyspark.sql import functions as F
 
@@ -673,13 +653,10 @@ def test_stream_left_outer_join_matched_and_null_rows(spark, tmp_path):
     f3 = [(7, t0 + 1200 * m, 9, "click", 0.0),
           (8, t0 + 1200 * m, 8, "purchase", 1.0)]
     src = str(tmp_path / "ev")
-    rows_all = []
-    for rows in (f1, f2, f3):
-        rows_all += rows
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.05)
+    rows_all = f1 + f2 + f3
+    SE.write_replay_source(
+        src, [spark.createDataFrame(rows, schema).coalesce(1) for rows in (f1, f2, f3)]
+    )
 
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
@@ -713,7 +690,6 @@ def test_streaming_token_bucket_equals_batch_across_boundaries(spark, tmp_path):
     span micro-batches (state carries tokens + last-seen across the
     boundary) — including a refill accrued ACROSS the boundary."""
     import datetime as dt
-    import time
 
     from usedcars_bigdata_spark.operators.timeseries import (
         token_bucket_admission,
@@ -730,13 +706,10 @@ def test_streaming_token_bucket_equals_batch_across_boundaries(spark, tmp_path):
     f1 = [(1, t0, 1), (1, t0 + 1 * m, 2), (1, t0 + 2 * m, 3)]
     f2 = [(1, t0 + 3 * m, 4), (1, t0 + 70 * m, 5), (2, t0 + 70 * m, 6)]
     src = str(tmp_path / "tb")
-    rows_all = []
-    for rows in (f1, f2):
-        rows_all += rows
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.05)
+    rows_all = f1 + f2
+    SE.write_replay_source(
+        src, [spark.createDataFrame(rows, schema).coalesce(1) for rows in (f1, f2)]
+    )
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(src)

@@ -21,8 +21,8 @@ from ..ext import text as TX
 from ..ml import eval as ME
 from ..operators import graph as G
 from ..sources import load_table
-from .registry import query
-from ..streaming.events import run_stream
+from .registry import query, scratch_dir
+from ..streaming.events import run_stream, write_replay_source
 
 # Shared synthesis: one row per order with (label, score, price_cents, fold).
 _SCORED_CTE = """
@@ -1185,50 +1185,30 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     state + the flush."""
     import glob as _glob
     import os
-    import tempfile
-    import time
 
     from ..streaming.events import read_event_stream
     from ..streaming.joins import clicks_left_outer_purchases
 
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_louter_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
+    events = load_table(spark, sf_dir, "events")
+    sent = spark.createDataFrame(
+        [
+            (-1, -1, "click", 0.0, ""),
+            (-2, -2, "purchase", 0.0, ""),
+        ],
+        "event_id long, user_id long, event_type string, "
+        "value double, props string",
+    ).crossJoin(events.agg(F.max("ts").alias("max_ts"))).select(
+        "event_id",
+        F.when(F.col("event_type") == "click",
+               F.col("max_ts") + F.expr("INTERVAL 10 DAYS 2 HOURS"))
+        .otherwise(F.col("max_ts") + F.expr("INTERVAL 10 DAYS"))
+        .alias("ts"),
+        "user_id", "event_type", "value", "props",
     )
-    done = os.path.join(src, "_ALL_RANGES_DONE")
-    if not os.path.exists(done):
-        events = load_table(spark, sf_dir, "events")
-        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
-        max_ts = events.agg(F.max("ts")).collect()[0][0]
-        sent = spark.createDataFrame(
-            [
-                (-1, -1, "click", 0.0, ""),
-                (-2, -2, "purchase", 0.0, ""),
-            ],
-            "event_id long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.when(F.col("event_type") == "click",
-                   F.lit(max_ts) + F.expr("INTERVAL 10 DAYS 2 HOURS"))
-            .otherwise(F.lit(max_ts) + F.expr("INTERVAL 10 DAYS"))
-            .alias("ts"),
-            "user_id", "event_type", "value", "props",
-        )
-        sent.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, "sentinel")
-        )
-        for f in _glob.glob(os.path.join(src, "sentinel", "part-*.parquet")):
-            os.rename(f, os.path.join(src, "part-99999-sentinel.parquet"))
-        now = time.time()
-        for i, pth in enumerate(
-            sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
-        ):
-            os.utime(pth, (now + 2.0 * i, now + 2.0 * i))
-        with open(done, "w") as fh:
-            fh.write("ok")
+    src = write_replay_source(
+        scratch_dir(spark, sf_dir, "stream_louter"),
+        [events.repartitionByRange(3, "ts"), sent.coalesce(1)],
+    )
     sink = "ts_stream_left_outer_sink"
     stream = read_event_stream(spark, src, glob="*.parquet",
                                max_files_per_trigger=1)

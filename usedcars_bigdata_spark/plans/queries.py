@@ -28,8 +28,8 @@ from ..operators import sort as O
 from ..operators import timeseries as TS
 from ..operators import window as W
 from ..sources import load_table
-from .registry import query
-from ..streaming.events import run_stream
+from .registry import query, scratch_dir
+from ..streaming.events import run_stream, write_replay_source
 
 # ---------------------------------------------------------------------------
 # Reference parity: the three benchmark queries
@@ -1961,13 +1961,7 @@ def rel_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_shapes.py) — at scale this is the difference between
     scanning one year and scanning the whole table. Overwrite mode keeps
     the entry idempotent across driver replays."""
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"usedcars_partitioned_orders_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir(spark, sf_dir, "partitioned_orders")
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
@@ -2002,13 +1996,7 @@ def rel_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet-sourced oracle proves the round-trip is lossless for the text
     payload (JSON escaping of newlines/quotes/unicode included). Overwrite
     mode keeps the entry idempotent."""
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"usedcars_jsonl_docs_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir(spark, sf_dir, "jsonl_docs")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     docs.write.mode("overwrite").json(out)
     back = spark.read.schema("doc_id BIGINT, lang STRING, text STRING").json(out)
@@ -2266,17 +2254,8 @@ def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     because production tables should evolve through a catalog, not
     ad-hoc directory scans."""
     import os
-    import tempfile
 
-    # Keyed by applicationId as well as scale factor: two concurrent
-    # sessions against the same sf (bench overlapping the correctness
-    # harness) must not race overwrite-vs-read on a shared /tmp path.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_schema_evo_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out = scratch_dir(spark, sf_dir, "schema_evo")
     orders = load_table(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -3351,18 +3330,8 @@ def rel_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats are interchangeable behind the same DataFrame surface — write
     the documents metadata as ORC (zlib), read it back, certify
     value-identity against the parquet-derived oracle. Text column
-    excluded to keep the round-trip payload metadata-shaped. Tempdir keyed
-    by applicationId per the schema-evolution precedent (no
-    overwrite-vs-read race between concurrent harnesses)."""
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_orc_rt_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    excluded to keep the round-trip payload metadata-shaped."""
+    out = scratch_dir(spark, sf_dir, "orc_rt")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -3395,15 +3364,7 @@ def rel_textparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     different, weaker guarantee). The parse predicates are plain column
     regexes (JVM, codegen) — no Python in the row path; at 100 TB the
     text scan parallelizes by line ranges like any file source."""
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_text_rt_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out = scratch_dir(spark, sf_dir, "text_rt")
     events = load_table(spark, sf_dir, "events")
     lines = events.select(
         F.concat(
@@ -4053,17 +4014,8 @@ def rel_dpo(spark: SparkSession, sf_dir: str) -> DataFrame:
     must survive, the restated partition must fully replace (INSERT
     OVERWRITE a static mode would truncate the whole table; dynamic
     replaces exactly the partitions present in the new batch). The final
-    read-back aggregate matches the oracle's restated view of the source.
-    Tempdir keyed by applicationId per the schema-evolution precedent."""
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_dpo_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    read-back aggregate matches the oracle's restated view of the source."""
+    out = scratch_dir(spark, sf_dir, "dpo")
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "y", F.year("o_orderdate")
     )
@@ -5233,22 +5185,15 @@ def rel_pivot_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _multibatch_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """The events table re-laid-out as THREE parquet files split by
-    event-time range, written once per application and shared by the
-    multi-micro-batch stream entries: streamed with maxFilesPerTrigger=1,
-    each file is one micro-batch and event time advances monotonically."""
-    import os
-    import tempfile
-
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_mb_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
+    event-time range (one range-partitioned write job), written once per
+    application and shared by the multi-micro-batch stream entries:
+    streamed with maxFilesPerTrigger=1, each file is one micro-batch, and
+    the ascending mtimes ``write_replay_source`` stamps make event time
+    advance monotonically across them."""
+    return write_replay_source(
+        scratch_dir(spark, sf_dir, "stream_mb"),
+        [load_table(spark, sf_dir, "events").repartitionByRange(3, "ts")],
     )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
-        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
-    return src
 
 
 @query(
@@ -5273,8 +5218,7 @@ def ts_stream_multibatch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises). Complete output mode retains every window, so the final
     table equals the batch aggregation whatever the batch boundaries.
     Range-split (not random) so each batch advances event time
-    monotonically, the realistic arrival order. Tempdir keyed by
-    applicationId per the repo precedent."""
+    monotonically, the realistic arrival order."""
     from ..streaming.events import read_event_stream, windowed_counts
 
     src = _multibatch_events_dir(spark, sf_dir)
@@ -5316,27 +5260,13 @@ def ts_stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly associative in any accumulation order — and the /100 + round
     happen only in the final read."""
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.events import read_event_stream
     from ..streaming.sinks import upsert_to_parquet
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_upsert_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    base = scratch_dir(spark, sf_dir, "stream_upsert", fresh=("target", "ck"))
     src = _multibatch_events_dir(spark, sf_dir)
     target = os.path.join(base, "target")
-    ck = os.path.join(base, "ck")
-    # Fresh target/checkpoint per run: the upsert is idempotent per batch,
-    # but a stale checkpoint would mark all input processed and leave the
-    # (possibly partially deleted) old target as the answer.
-    for d in (target, ck):
-        if os.path.exists(d):
-            shutil.rmtree(d)
     sink = "ts_stream_upsert_sink_q"
     agg = (
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1)
@@ -5347,12 +5277,10 @@ def ts_stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = upsert_to_parquet(
-        agg, target, key="bucket", checkpoint=ck, query_name=sink,
-        output_mode="update",
+        agg, target, key="bucket", checkpoint=os.path.join(base, "ck"),
+        query_name=sink, output_mode="update",
     )
-    q.processAllAvailable()
     n_batches = len(q.recentProgress)
-    q.stop()
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     return spark.read.parquet(target).select(
         "bucket",
@@ -5374,33 +5302,22 @@ def ts_stream_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-vocabulary sized — the property that makes the pattern run
     indefinitely at 100 TB."""
     import os
-    import shutil
-    import tempfile
-    import time
 
     from ..streaming.dedup import streaming_near_dup_flags
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_neardup_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
+    base = scratch_dir(
+        spark, sf_dir, "stream_neardup", fresh=("state", "flags", "ck")
     )
-    src = os.path.join(base, "src")
+    # three id-ordered files, one per micro-batch
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if not os.path.exists(src):
-        # sequential writes: the file source orders batches by mtime
-        n_docs = docs.count()
-        cuts = [(0, n_docs // 3), (n_docs // 3, 2 * n_docs // 3),
-                (2 * n_docs // 3, n_docs + 10**9)]
-        for lo, hi in cuts:
-            (docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-                 .coalesce(1).write.mode("append").parquet(src))
-            time.sleep(1.1)
-    for d in ("state", "flags", "ck"):
-        p = os.path.join(base, d)
-        if os.path.exists(p):
-            shutil.rmtree(p)
+    n_docs = docs.count()
+    cuts = [(0, n_docs // 3), (n_docs // 3, 2 * n_docs // 3),
+            (2 * n_docs // 3, n_docs + 10**9)]
+    src = write_replay_source(os.path.join(base, "src"), [
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        .coalesce(1)
+        for lo, hi in cuts
+    ])
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -5415,9 +5332,7 @@ def ts_stream_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=os.path.join(base, "ck"),
         query_name=sink,
     )
-    q.processAllAvailable()
     n_batches = len(q.recentProgress)
-    q.stop()
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     return spark.read.parquet(os.path.join(base, "flags"))
 
@@ -5459,45 +5374,22 @@ def rows_stream_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_streaming_advanced. (The name keeps its historical rows_
     prefix for continuity across round records.)"""
     import os
-    import shutil
-    import tempfile
-    import time
 
     from ..streaming.dedup import streaming_holt_winters
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_hw_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    src = os.path.join(base, "src")
+    base = scratch_dir(spark, sf_dir, "stream_hw", fresh=("state", "out", "ck"))
     hourly = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("b"))
         .agg(F.count("*").cast("double").alias("x"))
     )
-    if not os.path.exists(src):
-        # ONE range-partitioned write + ascending mtime stamps (the
-        # sessionize idiom) instead of three sequential filtered writes
-        # with real sleeps — the old form re-aggregated events three
-        # times and slept 2.2s; under the driver's vanilla
-        # 200-shuffle-partition session the whole entry measured 84s at
-        # sf0.1, most of it source prep. Equal-count (not equal-span)
-        # thirds — the emitted fold is batch-boundary-independent
-        # (every row emits exactly once; state carries).
-        import glob as _glob
-
-        hourly.repartitionByRange(3, "b").write.mode("overwrite").parquet(src)
-        now = time.time()
-        for i, p in enumerate(
-            sorted(_glob.glob(os.path.join(src, "part-*.parquet")))
-        ):
-            os.utime(p, (now + 2.0 * i, now + 2.0 * i))
-    for d in ("state", "out", "ck"):
-        p = os.path.join(base, d)
-        if os.path.exists(p):
-            shutil.rmtree(p)
+    # ONE range-partitioned write job (three filtered writes re-aggregate
+    # events three times). Equal-count (not equal-span) thirds — the
+    # emitted fold is batch-boundary-independent (every row emits exactly
+    # once; state carries).
+    src = write_replay_source(
+        os.path.join(base, "src"), [hourly.repartitionByRange(3, "b")]
+    )
     sink = "rows_stream_hw_q"
     stream = (
         spark.readStream.schema("event_type string, b timestamp, x double")
@@ -5515,9 +5407,7 @@ def rows_stream_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="x",
         query_name=sink,
     )
-    q.processAllAvailable()
     n_batches = len(q.recentProgress)
-    q.stop()
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     return spark.read.parquet(os.path.join(base, "out"))
 
@@ -7319,44 +7209,19 @@ def ts_stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     range split cuts mid-session); the >=3-batch assertion keeps the
     entry honest about exercising cross-batch state.
 
-    Source-ordering lesson (round 5): the other multibatch entries
-    write their 3 range files in ONE job, which gives all parts the
-    same mtime — and the file source then orders same-mtime files
+    Source-ordering lesson (round 5): three range files written by ONE
+    job share an mtime, and the file source then orders same-mtime files
     NONDETERMINISTICALLY (observed: the middle time-range arriving
-    first). Their aggregations are arrival-order-insensitive, so they
-    never noticed; a session FOLD is not. This entry therefore gives
-    the three time-range files STRICTLY ASCENDING mtimes — one
-    range-partitioned write job, then os.utime stamps each part file
-    2 s apart in path order (part-0000k is the k-th ascending ts
-    range), which is the same contract a Kafka source gives per
-    partition (in-order delivery), replayed faithfully by the file
-    source's mtime sort. (The first cut wrote three sequential filtered
-    jobs with real sleeps between them — 3 extra scans + 2.1 s of wall
-    clock per cold run; stamping mtimes after one job is equivalent
-    and free.)"""
-    import glob as _glob
-    import os
-    import tempfile
-    import time
-
+    first). An aggregation is arrival-order-insensitive; a session FOLD
+    is not. The shared multibatch source therefore carries STRICTLY
+    ASCENDING mtimes (``write_replay_source`` stamps part-0000k, the k-th
+    ascending ts range, after the one write job) — the same contract a
+    Kafka source gives per partition (in-order delivery), replayed
+    faithfully by the file source's mtime sort."""
     from ..streaming.events import read_event_stream
     from ..streaming.stateful import streaming_sessionize
 
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_sess_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    done = os.path.join(src, "_ALL_RANGES_DONE")
-    if not os.path.exists(done):
-        events = load_table(spark, sf_dir, "events")
-        events.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
-        now = time.time()
-        for i, p in enumerate(sorted(_glob.glob(os.path.join(src, "part-*.parquet")))):
-            os.utime(p, (now + 2.0 * i, now + 2.0 * i))
-        with open(done, "w") as fh:
-            fh.write("ok")
+    src = _multibatch_events_dir(spark, sf_dir)
     sink = "ts_stream_sessionize_sink"
     sessions = streaming_sessionize(
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1)
@@ -7951,42 +7816,23 @@ def rows_stream_late_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row (n_batches, planted_late_rows,
     dropped_by_watermark_metric, late_range_windows_emitted,
     total_emitted)."""
-    import glob as _glob
     import json
-    import os
-    import tempfile
-    import time
 
     from ..streaming.events import read_event_stream, windowed_counts
 
-    src = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_stream_late_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    done = os.path.join(src, "_ALL_RANGES_DONE")
     events = load_table(spark, sf_dir, "events")
     lo, hi = events.agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).first()
     span = (hi - lo) / 4
     cuts = [lo + 2 * span, lo + 3 * span]
-    if not os.path.exists(done):
-        order = [
-            F.col("ts") < cuts[0],                              # batch 1
-            F.col("ts") >= cuts[1],                             # batch 2
-            (F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1]),  # batch 3: LATE
-        ]
-        for pred in order:
-            events.filter(pred).coalesce(1).write.mode("append").parquet(src)
-            time.sleep(1.05)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    parts = sorted(
-        _glob.glob(os.path.join(src, "part-*.parquet")), key=os.path.getmtime
+    late = (F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])
+    order = [F.col("ts") < cuts[0], F.col("ts") >= cuts[1], late]  # 3rd: LATE
+    src = write_replay_source(
+        scratch_dir(spark, sf_dir, "stream_late"),
+        [events.filter(pred).coalesce(1) for pred in order],
     )
-    planted = spark.read.parquet(parts[2]).count()
+    planted = events.filter(late).count()
     sink = "rows_stream_late_sink"
     stream = windowed_counts(
         read_event_stream(spark, src, glob="*.parquet", max_files_per_trigger=1),
@@ -8215,21 +8061,12 @@ def rel_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as headered CSV, read it back with an EXPLICIT schema (no inferSchema
     pass), certify value-identity against the parquet-derived oracle.
     Comment column excluded so the payload is delimiter-clean — quoting
-    parity has its own entry (rel_csv_permissive). Tempdir keyed by
-    applicationId per the schema-evolution precedent."""
-    import os
-    import tempfile
-
+    parity has its own entry (rel_csv_permissive)."""
     from pyspark.sql import types as T
 
     from ..sources import io as IO
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_csv_rt_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out = scratch_dir(spark, sf_dir, "csv_rt")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -8261,19 +8098,11 @@ def rel_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands as a row, (b) exactly the malformed record parses to NULL, and
     (c) the parsed values are undamaged (key checksum). DROPMALFORMED /
     FAILFAST variants are pytest-covered (test_io)."""
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
     from ..sources import io as IO
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_csv_perm_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out = scratch_dir(spark, sf_dir, "csv_perm")
     nation = load_table(spark, sf_dir, "nation")
     lines = nation.select(
         F.concat_ws(",", F.col("n_name"), F.col("n_nationkey")).alias("value")
@@ -8507,34 +8336,21 @@ def ts_stream_anomaly_scalable_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine strategies — per-key recurrence when state does not merge,
     combinable decomposition when it does."""
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.events import read_event_stream
     from ..streaming.stateful import running_anomaly_flags_scalable
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "usedcars_anom_scal_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
-    # Fresh state/out/checkpoint per run: a stale checkpoint would mark
-    # all input processed and return the previous run's parquet as-is.
-    for d in ("state", "out", "ck"):
-        shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+    base = scratch_dir(spark, sf_dir, "anom_scal", fresh=("state", "out", "ck"))
     cents = read_event_stream(spark, sf_dir).withColumn(
         "value", F.round(F.col("value") * 100)
     )
-    q = running_anomaly_flags_scalable(
+    running_anomaly_flags_scalable(
         cents,
         state_dir=os.path.join(base, "state"),
         out_dir=os.path.join(base, "out"),
         checkpoint=os.path.join(base, "ck"),
         query_name="ts_anom_scal",
     )
-    q.processAllAvailable()
-    q.stop()
     return spark.read.parquet(os.path.join(base, "out")).select(
         "user_id",
         "event_id",

@@ -15,7 +15,10 @@ order-insensitive value-hash comparison work (see /root/repo/TESTDATA.md):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,3 +42,24 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+def scratch_dir(
+    spark: SparkSession, sf_dir: str, tag: str, fresh: Iterable[str] = ()
+) -> str:
+    """The scratch directory of an entry that writes files:
+    ``<tmp>/usedcars_<tag>_<sf name>_<applicationId>``. Keyed by
+    applicationId as well as scale factor, so two concurrent sessions
+    against the same sf (a bench overlapping the correctness harness)
+    never race overwrite-vs-read on a shared path. Each subdirectory
+    named in ``fresh`` is removed, so the run starts it empty — a stale
+    checkpoint would mark all input processed and return the previous
+    run's output as the answer."""
+    base = os.path.join(
+        tempfile.gettempdir(),
+        f"usedcars_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_"
+        f"{spark.sparkContext.applicationId}",
+    )
+    for d in fresh:
+        shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+    return base

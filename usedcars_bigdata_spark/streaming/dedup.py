@@ -160,10 +160,11 @@ def streaming_near_dup_flags(
     tests/test_streaming_advanced.py against the batch computation on the
     full corpus.
 
-    Returns the StreamingQuery; flags append to ``out_dir`` as parquet
-    (id, is_near_dup) — EVERY batch document gets a row: documents too
-    short to shingle (< 3 words) emit is_near_dup = false rather than
-    silently no row at all (r9 review)."""
+    Returns the drained, terminated StreamingQuery (``run_stream``);
+    flags append to ``out_dir`` as parquet (id, is_near_dup) — EVERY
+    batch document gets a row: documents too short to shingle (< 3
+    words) emit is_near_dup = false rather than silently no row at all
+    (r9 review)."""
     from ..ext.dedup import (
         band_keys,
         minhash_signatures_from_arrays,
@@ -246,8 +247,7 @@ def streaming_near_dup_flags(
         )
 
     return run_stream(
-        docs_stream, query_name, foreach_batch=handle, checkpoint=checkpoint,
-        available_now=False,
+        docs_stream, query_name, foreach_batch=handle, checkpoint=checkpoint
     )
 
 
@@ -363,6 +363,5 @@ def streaming_holt_winters(
     # demonstrates that API; this one demonstrates durable cross-restart
     # state in plain parquet.
     return run_stream(
-        series_stream, query_name, foreach_batch=handle,
-        checkpoint=checkpoint, available_now=False,
+        series_stream, query_name, foreach_batch=handle, checkpoint=checkpoint
     )

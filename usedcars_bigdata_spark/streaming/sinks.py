@@ -121,7 +121,9 @@ def upsert_to_parquet(
     delivers the keys whose aggregate changed, carrying the CUMULATIVE
     value, and the keyed merge makes the target converge to the batch
     answer (contract entry ts_stream_upsert_sink checks exactly that
-    against the DuckDB batch aggregation)."""
+    against the DuckDB batch aggregation). Returns the drained,
+    terminated query (``run_stream``); new input is picked up by calling
+    again on the same checkpoint."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -130,7 +132,7 @@ def upsert_to_parquet(
 
     return run_stream(
         stream_df, query_name, output_mode=output_mode, foreach_batch=handle,
-        checkpoint=checkpoint, available_now=False,
+        checkpoint=checkpoint,
     )
 
 

@@ -484,5 +484,5 @@ def running_anomaly_flags_scalable(
 
     return run_stream(
         events.select("user_id", "event_id", "value"), query_name,
-        foreach_batch=handle, checkpoint=checkpoint, available_now=False,
+        foreach_batch=handle, checkpoint=checkpoint,
     )
