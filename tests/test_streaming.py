@@ -306,14 +306,20 @@ def test_run_stream_failed_start_keeps_conf(spark, sf_dir):
     the caller's conf as it was and no query behind."""
     from pyspark.errors import AnalysisException
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {key: spark.conf.get(key) for key in keys}
+    # the event stream alone only evicts state, so run_stream turns the
+    # trailing batch off around this start()
+    assert SE._only_evicts_state(SE.read_event_stream(spark, sf_dir))
     with pytest.raises(AnalysisException):
         SE.run_stream(
             SE.read_event_stream(spark, sf_dir), "bad_mode_sink",
             output_mode="complete",
         )
-    assert spark.conf.get(key) == before
+    assert {key: spark.conf.get(key) for key in keys} == before
     assert all(q.name != "bad_mode_sink" for q in spark.streams.active)
 
 
@@ -355,6 +361,44 @@ def test_run_stream_times_out(spark, sf_dir, monkeypatch):
     assert all(q.name != "slow_sink" for q in spark.streams.active)
 
 
+def test_run_stream_stop_is_bounded(spark, tmp_path, monkeypatch):
+    """A foreachBatch handler that never returns cannot wedge the caller:
+    the stop after STREAM_TIMEOUT_S is bounded by STREAM_STOP_TIMEOUT_S,
+    TimeoutError still arrives, and the session's stopTimeout is put
+    back."""
+    import threading
+    import time
+
+    monkeypatch.setattr(SE, "STREAM_TIMEOUT_S", 1)
+    monkeypatch.setattr(SE, "STREAM_STOP_TIMEOUT_S", 1)
+    stop_key = "spark.sql.streaming.stopTimeout"
+    before = spark.conf.get(stop_key)
+    release = threading.Event()
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    started = time.monotonic()
+    try:
+        with pytest.raises(TimeoutError) as timed_out:
+            SE.run_stream(
+                stream, "hung_sink",
+                # bounded only so that an unbounded stop fails, not hangs
+                foreach_batch=lambda batch_df, batch_id: release.wait(60),
+            )
+        assert time.monotonic() - started < 10
+        assert timed_out.value.__cause__ is not None  # the stop timed out too
+        assert spark.conf.get(stop_key) == before
+    finally:
+        release.set()
+        for q in spark.streams.active:
+            if q.name == "hung_sink":
+                try:
+                    q.awaitTermination(60)
+                except Exception:  # noqa: BLE001 - ended by the interrupt
+                    pass
+    assert all(q.name != "hung_sink" for q in spark.streams.active)
+
+
 def test_foreach_batch_helper_times_out_and_stops(spark, tmp_path, monkeypatch):
     """A foreachBatch helper drains through run_stream's bounded
     availableNow too: an upsert whose merge blocks past STREAM_TIMEOUT_S
@@ -374,6 +418,40 @@ def test_foreach_batch_helper_times_out_and_stops(spark, tmp_path, monkeypatch):
             checkpoint=str(tmp_path / "ck"), query_name="blocked_upsert",
         )
     assert all(q.name != "blocked_upsert" for q in spark.streams.active)
+
+
+def test_scratch_dir_is_removed_at_exit(tmp_path):
+    """A scratch dir is keyed by applicationId, so no later process can
+    reuse it: the process that asked for it removes it when it exits,
+    and leaves another application's dir alone."""
+    import subprocess
+    import sys
+    import textwrap
+
+    other = tmp_path / "usedcars_t_sf0.001_local-other"
+    other.mkdir()
+    script = textwrap.dedent(f"""
+        import os, tempfile, types
+        from usedcars_bigdata_spark.plans.registry import scratch_dir
+        tempfile.tempdir = {str(tmp_path)!r}
+        spark = types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(applicationId="local-mine"))
+        for _ in range(2):  # registered once however often it is asked for
+            path = scratch_dir(spark, "/data/sf0.001/", "t")
+        os.makedirs(os.path.join(path, "ck"))
+        print(path)
+    """)
+    import usedcars_bigdata_spark
+
+    root = os.path.dirname(os.path.dirname(usedcars_bigdata_spark.__file__))
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        check=True, timeout=120, cwd=root,
+    )
+    mine = out.stdout.strip()
+    assert mine == str(tmp_path / "usedcars_t_sf0.001_local-mine")
+    assert not os.path.exists(mine)
+    assert other.is_dir()
 
 
 def test_replay_source_ascends_and_is_written_once(spark, tmp_path):
@@ -454,11 +532,88 @@ def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
     )
 
 
+def _hourly_dedup(stream):
+    from usedcars_bigdata_spark.streaming.dedup import (
+        dedup_within_watermark,
+        hourly_user_action_keys,
+    )
+
+    return dedup_within_watermark(
+        hourly_user_action_keys(stream), ["user_id", "event_type", "hour_start"]
+    ).select("user_id", "event_type", "hour_start")
+
+
+def test_dedup_stream_skips_idle_trailing_batch(spark, sf_dir, batch_events):
+    """A watermarked dedup into the memory sink on a temporary checkpoint
+    only evicts state after its last data batch, so run_stream leaves the
+    no-data batch out: one micro-batch, rows equal to batch DISTINCT."""
+    from pyspark.sql import functions as F
+
+    q = SE.run_stream(_hourly_dedup(SE.read_event_stream(spark, sf_dir)),
+                      "dedup_one_batch")
+    assert len(q.recentProgress) == 1, [p["numInputRows"] for p in q.recentProgress]
+    cols = ["user_id", "event_type", "hour_start"]
+    want = batch_events.select(
+        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour_start")
+    ).distinct()
+    assert _rows(spark.table("dedup_one_batch"), cols) == _rows(want, cols)
+
+
+def test_dedup_stream_with_checkpoint_keeps_trailing_batch(spark, sf_dir, tmp_path):
+    """A caller checkpoint can be restarted from, so its state must be
+    evicted: the same dedup keeps Spark's trailing no-data batch."""
+    q = SE.run_stream(
+        _hourly_dedup(SE.read_event_stream(spark, sf_dir)), "dedup_ck",
+        checkpoint=str(tmp_path / "ck"),
+    )
+    inputs = [p["numInputRows"] for p in q.recentProgress]
+    assert len(inputs) == 2 and inputs[-1] == 0, inputs
+
+
+def _clicks_and_purchases(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    stream = SE.read_event_stream(spark, sf_dir)
+    return (
+        stream.filter(F.col("event_type") == "click"),
+        stream.filter(F.col("event_type") == "purchase"),
+    )
+
+
+def test_inner_stream_join_runs_one_batch(spark, sf_dir):
+    """An inner interval join emits every pair in the batch that reads
+    it; its trailing batch would only evict, so it is left out."""
+    from usedcars_bigdata_spark.streaming.joins import clicks_to_purchases
+
+    joined = clicks_to_purchases(*_clicks_and_purchases(spark, sf_dir))
+    q = SE.run_stream(joined, "inner_join_one_batch")
+    assert len(q.recentProgress) == 1, [p["numInputRows"] for p in q.recentProgress]
+    assert spark.table("inner_join_one_batch").count() > 0
+
+
+def test_left_outer_stream_join_keeps_trailing_batch(spark, sf_dir):
+    """A left-outer join emits its null-padded rows when the watermark
+    passes, i.e. in the trailing no-data batch: that batch is kept and
+    writes them."""
+    from usedcars_bigdata_spark.streaming.joins import clicks_left_outer_purchases
+
+    joined = clicks_left_outer_purchases(*_clicks_and_purchases(spark, sf_dir))
+    assert not SE._only_evicts_state(joined)
+    q = SE.run_stream(joined, "left_outer_trailing")
+    last = q.recentProgress[-1]
+    assert len(q.recentProgress) >= 2 and last["numInputRows"] == 0
+    assert last["sink"]["numOutputRows"] > 0, last["sink"]
+    nulls = spark.table("left_outer_trailing").filter("purchase_id IS NULL")
+    assert nulls.count() > 0
+
+
 def test_only_run_stream_starts_streams():
     """Structural guard for the one stream lifecycle: in the package,
     ``.writeStream`` is touched only inside streaming.events.run_stream,
     and nothing under plans/ or streaming/ sets
-    spark.sql.shuffle.partitions except run_stream; no code drains a
+    spark.sql.shuffle.partitions except run_stream, and nothing in the
+    package but run_stream sets the trailing-batch or stop-timeout
+    stream confs; no code drains a
     query by hand (``processAllAvailable``) or keeps one running
     (``available_now``); plans/ never sleeps to order replay files, and
     only ``scratch_dir`` names a temp directory there."""
@@ -469,7 +624,10 @@ def test_only_run_stream_starts_streams():
 
     root = pathlib.Path(usedcars_bigdata_spark.__file__).parent
     key = "spark.sql.shuffle.partitions"
-    writers, setters, drains, sleeps, tempdirs = [], [], [], [], []
+    stream_keys = ("noDataMicroBatches", "stopTimeout")
+    writers, setters, stream_setters, drains, sleeps, tempdirs = (
+        [], [], [], [], [], []
+    )
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         tree = ast.parse(path.read_text())
@@ -503,6 +661,17 @@ def test_only_run_stream_starts_streams():
                 )
             ):
                 setters.append(where)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "config", "sql")
+                and any(
+                    isinstance(c, ast.Constant) and isinstance(c.value, str)
+                    and any(k in c.value for k in stream_keys)
+                    for c in ast.walk(scope)
+                )
+            ):
+                stream_setters.append(where)
             if rel.startswith("plans/") and isinstance(node, ast.Call):
                 func = ast.unparse(node.func)
                 if func.endswith("sleep"):
@@ -512,6 +681,7 @@ def test_only_run_stream_starts_streams():
     runner = ("streaming/events.py", "run_stream")
     assert writers and set(writers) == {runner}, writers
     assert set(setters) <= {runner}, setters
+    assert stream_setters and set(stream_setters) == {runner}, stream_setters
     assert drains == [], drains
     assert sleeps == [], sleeps
     assert tempdirs == [("plans/registry.py", "scratch_dir")], tempdirs

@@ -15,6 +15,7 @@ order-insensitive value-hash comparison work (see /root/repo/TESTDATA.md):
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -44,6 +45,10 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+# Scratch directories this process has registered for removal at exit.
+_REMOVE_AT_EXIT: set[str] = set()
+
+
 def scratch_dir(
     spark: SparkSession, sf_dir: str, tag: str, fresh: Iterable[str] = ()
 ) -> str:
@@ -54,12 +59,19 @@ def scratch_dir(
     never race overwrite-vs-read on a shared path. Each subdirectory
     named in ``fresh`` is removed, so the run starts it empty — a stale
     checkpoint would mark all input processed and return the previous
-    run's output as the answer."""
+    run's output as the answer.
+
+    No later process can reuse a path keyed by this applicationId, so the
+    directory is removed when this process exits; directories of other
+    applications are never touched."""
     base = os.path.join(
         tempfile.gettempdir(),
         f"usedcars_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_"
         f"{spark.sparkContext.applicationId}",
     )
+    if base not in _REMOVE_AT_EXIT:
+        _REMOVE_AT_EXIT.add(base)
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
     for d in fresh:
         shutil.rmtree(os.path.join(base, d), ignore_errors=True)
     return base

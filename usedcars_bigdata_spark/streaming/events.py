@@ -18,18 +18,31 @@ A stream has one lifecycle:
 - ``read_event_stream`` only describes the source; building a stream has
   no effect on partition sizing;
 - ``run_stream`` is the one place a query starts. It sizes the query's
-  shuffle/state partitions from the sources in its plan, sets that conf
-  around ``start()`` alone, and runs every query as ``availableNow``: it
-  returns once the query has drained and terminated, or stops it and
-  raises ``TimeoutError`` after ``STREAM_TIMEOUT_S``. foreachBatch sinks
+  shuffle/state partitions from the sources in its plan, decides from the
+  same plan whether the query needs the trailing no-data micro-batch, sets
+  both confs around ``start()`` alone, and runs every query as
+  ``availableNow``: it returns once the query has drained and terminated,
+  or stops it and raises ``TimeoutError`` after ``STREAM_TIMEOUT_S`` (the
+  stop itself is bounded by ``STREAM_STOP_TIMEOUT_S``, so a hung
+  foreachBatch handler cannot wedge the caller). foreachBatch sinks
   (streaming.sinks, streaming.dedup, streaming.stateful) return the same
   terminated query.
+
+After its last data batch an ``availableNow`` query runs one more
+micro-batch with no input, to advance the watermark: it evicts expired
+state and emits what the eviction completes (an aggregate's closed
+windows, an outer join's null-padded rows). A memory-sink query on a
+temporary checkpoint whose operators only drop state — dedup, an inner
+join — can emit nothing in that batch, and its state is deleted with the
+checkpoint, so ``run_stream`` leaves the batch out for exactly those plans
+(``_only_evicts_state``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -138,6 +151,35 @@ def stream_sources(df: DataFrame) -> set[tuple[str, str]] | None:
         glob = opts.get("pathGlobFilter")
         sources.add((path.get(), glob.get() if glob.isDefined() else "*"))
     return sources
+
+
+# Analyzed-plan nodes that emit every output row in the batch that reads
+# its input: stateless nodes, and stateful ones whose state only decides
+# what to drop (dedup keys, an inner join's buffered sides). A no-data
+# batch over them only evicts state. Closed on purpose: a node missing
+# here (Aggregate, an outer Join, flatMapGroupsWithState, a static
+# relation) keeps the trailing batch.
+_EVICTION_ONLY = frozenset({
+    "Project", "Filter", "EventTimeWatermark", "StreamingRelation",
+    "SubqueryAlias", "Deduplicate", "DeduplicateWithinWatermark", "Join",
+})
+
+
+def _only_evicts_state(df: DataFrame) -> bool:
+    """True when every node of ``df``'s analyzed plan is in
+    ``_EVICTION_ONLY`` and every join is inner, so a micro-batch without
+    input emits no row."""
+    nodes = [df._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name not in _EVICTION_ONLY:
+            return False
+        if name == "Join" and node.joinType().toString() != "Inner":
+            return False
+        children = node.children()
+        nodes += [children.apply(i) for i in range(children.size())]
+    return True
 
 
 def query_shuffle_partitions(df: DataFrame, floor: int = 4) -> int:
@@ -281,6 +323,10 @@ def session_aggregates(
 # after it is stopped and reported as TimeoutError instead of wedging the
 # caller.
 STREAM_TIMEOUT_S = 600
+# Upper bound on that stop. Spark's stop waits for the running batch, and
+# its own default (spark.sql.streaming.stopTimeout = 0) waits forever on a
+# foreachBatch handler that never returns.
+STREAM_STOP_TIMEOUT_S = 30
 
 
 def run_stream(
@@ -297,17 +343,24 @@ def run_stream(
 
     1. Any active query called ``name`` in ``df``'s session is stopped.
     2. The query's shuffle/state partition count comes from its own input
-       (``query_shuffle_partitions`` with ``floor``). A query is fixed
-       when it starts (it clones the session conf inside ``start()``), so
-       the conf is set around ``start()`` only and the caller's value is
-       put back in ``finally`` — also when ``start()`` raises.
-    3. The sink is ``foreach_batch`` when given, else a memory table named
+       (``query_shuffle_partitions`` with ``floor``).
+    3. The trailing no-data micro-batch is left out when it can emit
+       nothing and the state it would evict is thrown away anyway: a
+       memory sink, no caller ``checkpoint`` (the query can never be
+       restarted), and a plan that ``_only_evicts_state``. Every other
+       query keeps Spark's default.
+    4. A query is fixed when it starts (it clones the session conf inside
+       ``start()``), so the confs of steps 2 and 3 are set around
+       ``start()`` only and the caller's values are put back in
+       ``finally`` — also when ``start()`` raises.
+    5. The sink is ``foreach_batch`` when given, else a memory table named
        ``name``; ``checkpoint`` sets the checkpoint location.
-    4. The query runs with ``trigger(availableNow=True)``: it drains all
+    6. The query runs with ``trigger(availableNow=True)``: it drains all
        available input and terminates before ``run_stream`` returns, so
        the returned query is no longer active. One still running after
-       ``STREAM_TIMEOUT_S`` is stopped and raises ``TimeoutError``; a
-       query failure raises as ``StreamingQueryException``.
+       ``STREAM_TIMEOUT_S`` is stopped, the stop bounded by
+       ``STREAM_STOP_TIMEOUT_S``, and raises ``TimeoutError`` either
+       way; a query failure raises as ``StreamingQueryException``.
 
     Resetting checkpoint and output directories stays with the caller:
     a restart reuses a checkpoint on purpose."""
@@ -325,18 +378,34 @@ def run_stream(
         writer = writer.foreachBatch(foreach_batch)
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
-    key = "spark.sql.shuffle.partitions"
-    caller_value = spark.conf.get(key)
-    spark.conf.set(key, str(query_shuffle_partitions(df, floor)))
+    trailing = (
+        foreach_batch is not None or checkpoint is not None
+        or not _only_evicts_state(df)
+    )
+    scoped = {
+        "spark.sql.shuffle.partitions": str(query_shuffle_partitions(df, floor)),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(trailing).lower(),
+    }
+    caller_values = {key: spark.conf.get(key) for key in scoped}
     try:
+        for key, value in scoped.items():
+            spark.conf.set(key, value)
         q = writer.start()
     finally:
-        spark.conf.set(key, caller_value)
+        for key, value in caller_values.items():
+            spark.conf.set(key, value)
     if not q.awaitTermination(STREAM_TIMEOUT_S):
-        q.stop()
-        raise TimeoutError(
-            f"stream {name!r} did not drain within {STREAM_TIMEOUT_S} s"
-        )
+        message = f"stream {name!r} did not drain within {STREAM_TIMEOUT_S} s"
+        stop_key = "spark.sql.streaming.stopTimeout"
+        caller_stop = spark.conf.get(stop_key)
+        spark.conf.set(stop_key, f"{STREAM_STOP_TIMEOUT_S}s")
+        try:
+            q.stop()
+        except Py4JJavaError as stop_error:  # Spark's TimeoutException
+            raise TimeoutError(message) from stop_error
+        finally:
+            spark.conf.set(stop_key, caller_stop)
+        raise TimeoutError(message)
     return q
 
 
