@@ -121,6 +121,16 @@ def _env_fingerprint() -> dict:
     }
 
 
+def _jvm_heap_live_mb(spark) -> float:
+    """Heap the driver JVM still holds after one full collection (MiB):
+    what the run left retained, such as state stores of finished streams,
+    cached tables or persisted hubs."""
+    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    mem = mgmt.getMemoryMXBean()
+    mem.gc()
+    return round(mem.getHeapMemoryUsage().getUsed() / (1 << 20), 1)
+
+
 def time_isolated(name: str, sf_dir: str) -> float:
     """Fresh-JVM steady-state timing of a registry entry (one unrecorded
     warmup + one timed run — the same methodology as the r7/r8 isolated
@@ -239,6 +249,7 @@ def main() -> None:
         else:
             timings[name] = dt
 
+    env["jvm_heap_live_mb"] = _jvm_heap_live_mb(spark)
     jiffies_end = _cpu_jiffies()
     if jiffies_start and jiffies_end:
         env["steal_pct"] = _steal_pct(jiffies_start, jiffies_end)

@@ -485,6 +485,63 @@ def test_replay_source_ascends_and_is_written_once(spark, tmp_path):
     assert snapshot() == before
 
 
+
+def _exact_range_counts(micros, n):
+    """Rows per range under the exact_ranges rule, computed in Python:
+    cut j is Spark's exact percentile j / n of ``micros`` (position
+    (count - 1) * j / n, linear between its neighbours) and a value's
+    range is the number of cuts strictly below it."""
+    import math
+
+    values = sorted(micros)
+    cuts = []
+    for j in range(1, n):
+        pos = (len(values) - 1) * (j / n)
+        lo, hi = math.floor(pos), math.ceil(pos)
+        if lo == hi or values[lo] == values[hi]:
+            cuts.append(float(values[lo]))
+        else:
+            cuts.append((hi - pos) * values[lo] + (pos - lo) * values[hi])
+    counts = [0] * n
+    for v in values:
+        counts[sum(c < v for c in cuts)] += 1
+    return counts
+
+
+def test_replay_ranges_are_exact_quantiles(spark, sf_dir, tmp_path):
+    """The range-split replay sources cut at exact quantiles, so their
+    batch sizes depend on the data alone: the multibatch events source
+    and an hourly series with ties (the Holt-Winters source) hold, file by
+    file in mtime order, the row counts the same rule gives when computed
+    straight from the parquet file."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from usedcars_bigdata_spark.plans.queries import _multibatch_events_dir
+
+    def file_counts(src):
+        files = sorted(glob.glob(os.path.join(src, "part-*.parquet")),
+                       key=os.path.getmtime)
+        return [len(pd.read_parquet(f)) for f in files]
+
+    ts = pd.read_parquet(os.path.join(sf_dir, "events.parquet"))[["event_type", "ts"]]
+    micros = ts["ts"].astype("datetime64[us]").astype("int64")
+    want = [c for c in _exact_range_counts(micros.tolist(), 3) if c]
+    assert file_counts(_multibatch_events_dir(spark, sf_dir)) == want
+
+    hourly = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.date_trunc("hour", "ts").alias("b")).count()
+    )
+    src = SE.write_replay_source(str(tmp_path / "hw"), [SE.exact_ranges(hourly, "b", 3)])
+    hours = (
+        ts.assign(b=ts["ts"].dt.floor("h")).drop_duplicates(["event_type", "b"])["b"]
+        .astype("datetime64[us]").astype("int64")
+    )
+    assert hours.duplicated().any()  # several types per hour: ties at cuts
+    want = [c for c in _exact_range_counts(hours.tolist(), 3) if c]
+    assert file_counts(src) == want and len(want) == 3
+
 def test_query_partitions_follow_plan_sources(spark, sf_dir, tmp_path):
     """The runner's count comes from the sources in the query's plan and
     equals the byte rule over that (dir, glob): for read_event_stream, for
@@ -568,6 +625,37 @@ def test_dedup_stream_with_checkpoint_keeps_trailing_batch(spark, sf_dir, tmp_pa
     )
     inputs = [p["numInputRows"] for p in q.recentProgress]
     assert len(inputs) == 2 and inputs[-1] == 0, inputs
+
+
+def test_finished_stream_state_is_unloaded(spark, sf_dir, tmp_path):
+    """A run_stream run never resumes under its run id, so once it has
+    terminated Spark's maintenance task unloads its state stores; the
+    session's 1 s maintenance interval makes that happen within seconds
+    (Spark's default, 60 s, keeps the whole final state on the heap for
+    up to a minute)."""
+    import time
+
+    q = SE.run_stream(
+        _hourly_dedup(SE.read_event_stream(spark, sf_dir)), "dedup_unload",
+        checkpoint=str(tmp_path / "ck"),
+    )
+    assert not q.isActive
+    jvm = spark.sparkContext._jvm
+    state = jvm.org.apache.spark.sql.execution.streaming.state
+    root = q._jsq.streamingQuery().resolvedCheckpointRoot() + "/state"
+    run_id = jvm.java.util.UUID.fromString(q.runId)
+    n_parts = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+    assert n_parts > 0
+    providers = [
+        state.StateStoreProviderId(state.StateStoreId(root, 0, p, "default"), run_id)
+        for p in range(n_parts)
+    ]
+    deadline = time.monotonic() + 10
+    while (
+        loaded := [p for p in providers if state.StateStore.isLoaded(p)]
+    ) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert not loaded, f"{len(loaded)}/{n_parts} state partitions still loaded"
 
 
 def _clicks_and_purchases(spark, sf_dir):

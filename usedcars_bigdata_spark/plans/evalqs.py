@@ -22,7 +22,7 @@ from ..ml import eval as ME
 from ..operators import graph as G
 from ..sources import load_table
 from .registry import query, scratch_dir
-from ..streaming.events import run_stream, write_replay_source
+from ..streaming.events import exact_ranges, run_stream, write_replay_source
 
 # Shared synthesis: one row per order with (label, score, price_cents, fold).
 _SCORED_CTE = """
@@ -1207,7 +1207,7 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = write_replay_source(
         scratch_dir(spark, sf_dir, "stream_louter"),
-        [events.repartitionByRange(3, "ts"), sent.coalesce(1)],
+        [exact_ranges(events, "ts", 3), sent.coalesce(1)],
     )
     sink = "ts_stream_left_outer_sink"
     stream = read_event_stream(spark, src, glob="*.parquet",
@@ -1221,7 +1221,7 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_stream(joined, sink)
     # Honesty check: with maxFilesPerTrigger=1 every written part file is
     # its own micro-batch. Count the actual files rather than assuming
-    # repartitionByRange(3) produced 3 (an empty range at a tiny SF
+    # exact_ranges(3) produced 3 (an empty range at a tiny SF
     # writes no file), and cap at the recentProgress retention window so
     # a trimmed progress buffer can't abort the whole sweep (ADVICE r7).
     n_files = len(_glob.glob(os.path.join(src, "part-*.parquet")))

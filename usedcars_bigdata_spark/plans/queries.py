@@ -29,7 +29,7 @@ from ..operators import timeseries as TS
 from ..operators import window as W
 from ..sources import load_table
 from .registry import query, scratch_dir
-from ..streaming.events import run_stream, write_replay_source
+from ..streaming.events import exact_ranges, run_stream, write_replay_source
 
 # ---------------------------------------------------------------------------
 # Reference parity: the three benchmark queries
@@ -5184,15 +5184,15 @@ def rel_pivot_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _multibatch_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The events table re-laid-out as THREE parquet files split by
-    event-time range (one range-partitioned write job), written once per
+    """The events table re-laid-out as THREE parquet files split at exact
+    event-time quantiles (``exact_ranges``, one write job), written once per
     application and shared by the multi-micro-batch stream entries:
     streamed with maxFilesPerTrigger=1, each file is one micro-batch, and
     the ascending mtimes ``write_replay_source`` stamps make event time
     advance monotonically across them."""
     return write_replay_source(
         scratch_dir(spark, sf_dir, "stream_mb"),
-        [load_table(spark, sf_dir, "events").repartitionByRange(3, "ts")],
+        [exact_ranges(load_table(spark, sf_dir, "events"), "ts", 3)],
     )
 
 
@@ -5383,12 +5383,12 @@ def rows_stream_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("b"))
         .agg(F.count("*").cast("double").alias("x"))
     )
-    # ONE range-partitioned write job (three filtered writes re-aggregate
+    # ONE write job of exact ranges (three filtered writes re-aggregate
     # events three times). Equal-count (not equal-span) thirds — the
     # emitted fold is batch-boundary-independent (every row emits exactly
     # once; state carries).
     src = write_replay_source(
-        os.path.join(base, "src"), [hourly.repartitionByRange(3, "b")]
+        os.path.join(base, "src"), [exact_ranges(hourly, "b", 3)]
     )
     sink = "rows_stream_hw_q"
     stream = (

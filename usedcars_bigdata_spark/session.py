@@ -37,6 +37,16 @@ def get_session(
     cheap while undershoot (huge partitions → spill) is not. At 100 TB scale
     the same code runs with shuffle_partitions sized to ~2-3× total cores and
     maxPartitionBytes keeping scan tasks ~128-256 MB.
+
+    ``spark.sql.streaming.stateStore.maintenanceInterval`` is 1 s, not
+    Spark's 60 s. Every stream here is a one-shot ``availableNow`` run
+    (``streaming.events.run_stream``) that is never restarted under the
+    same run id, so a stopped run's state stores are dead. Spark keeps
+    them loaded, each holding the run's whole final state on the heap,
+    until the next maintenance tick unloads them; the interval bounds
+    how long that is. The maintenance task is one per JVM and takes its
+    interval from the first store loaded, so it is set here with the
+    other engine defaults rather than per query.
     """
     # Spark's Python WORKERS are separate processes that must import this
     # package too (applyInPandasWithState / mapInPandas pickle functions by
@@ -74,6 +84,7 @@ def get_session(
         # Read INT64 TIMESTAMP(NANOS) parquet columns (Spark has no nanos
         # timestamp type) as raw longs; sources.io converts to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.streaming.stateStore.maintenanceInterval", "1s")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

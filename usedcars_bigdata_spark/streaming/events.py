@@ -247,7 +247,7 @@ def write_replay_source(directory: str, batches: list[DataFrame]) -> str:
 
     Each DataFrame in ``batches`` is written by one job, and each of its
     partitions becomes one parquet file — pass ``coalesce(1)`` for one
-    file, or ``repartitionByRange(n, col)`` for n ordered files from a
+    file, or ``exact_ranges(df, col, n)`` for n ordered files from a
     single job. The files get strictly ascending mtimes in list order,
     then partition order. The file source orders input by mtime, so a
     reader with ``maxFilesPerTrigger=1`` replays one file per micro-batch
@@ -274,6 +274,28 @@ def write_replay_source(directory: str, batches: list[DataFrame]) -> str:
         os.utime(f, (now + i, now + i))
     open(done, "w").close()
     return directory
+
+
+def exact_ranges(df: DataFrame, col: str, n: int) -> DataFrame:
+    """``df`` in ``n`` partitions, partition k holding the k-th of ``n``
+    ranges of the timestamp ``col``. The ``n - 1`` cut points are exact
+    quantiles, ``percentile(unix_micros(col), j / n)`` for j = 1 .. n-1
+    (Spark's exact percentile: position (count - 1) * j / n, linear
+    between the two values around it), and a row's range is the number of
+    cuts strictly below its ``unix_micros(col)``. Rows with equal values
+    share a range, and every value in range k is above every value in
+    range k - 1.
+
+    ``repartitionByRange`` samples its bounds with a seed taken from the
+    RDD id, so its cuts, and a replay's batch sizes, move between
+    processes; these depend on the data alone. The cuts are one aggregate
+    joined back lazily, so the split runs no action of its own."""
+    micros = F.unix_micros(F.col(col))
+    cuts = df.agg(
+        F.percentile(micros, [j / n for j in range(1, n)]).alias("_cuts")
+    )
+    range_id = F.size(F.filter("_cuts", lambda c: c < micros))
+    return df.crossJoin(cuts).repartitionById(n, range_id).drop("_cuts")
 
 
 def windowed_counts(
@@ -361,6 +383,9 @@ def run_stream(
        ``STREAM_TIMEOUT_S`` is stopped, the stop bounded by
        ``STREAM_STOP_TIMEOUT_S``, and raises ``TimeoutError`` either
        way; a query failure raises as ``StreamingQueryException``.
+    7. A terminated query's state is released within about 1 s: its run
+       id is never resumed, so Spark's maintenance task (every second,
+       ``session.get_session``) unloads its state stores from the heap.
 
     Resetting checkpoint and output directories stays with the caller:
     a restart reuses a checkpoint on purpose."""
