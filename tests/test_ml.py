@@ -31,6 +31,8 @@ def feature_table(spark, sf_dir):
 def test_featurization_shape(feature_table):
     row = feature_table.first()
     assert row["features"].size == 3
+    # run_model_suite reads the feature count from this metadata, not a job
+    assert feature_table.schema["features"].metadata["ml_attr"]["num_attrs"] == 3
     assert feature_table.count() > 0
 
 
@@ -312,3 +314,101 @@ def test_cap_categories_null_is_its_own_value(spark):
     # NULL is the most frequent value: it stays NULL (top-2 = {NULL, x})
     assert counts.get(None) == 4 and counts.get("x") == 3
     assert counts.get("__other") == 3  # y + z capped
+
+
+def _one_row_group_orders(spark, sf_dir, tmp_path):
+    """Orders as one parquet file with one row group, which Spark scans
+    with all its rows in one partition."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "orders_one_group.parquet")
+    cols = ["o_totalprice", "o_orderdate", "o_orderpriority", "o_orderstatus"]
+    table = pq.read_table(f"{sf_dir}/orders.parquet", columns=cols)
+    pq.write_table(table, path, row_group_size=table.num_rows)
+    assert pq.ParquetFile(path).num_row_groups == 1
+    return spark.read.parquet(path).select(
+        F.col("o_totalprice").alias("label"),
+        F.year("o_orderdate").cast("double").alias("order_year"),
+        "o_orderpriority",
+        "o_orderstatus",
+    )
+
+
+def _features(df):
+    return FT.build_feature_table(
+        df, "label", ["order_year", "o_orderpriority", "o_orderstatus"]
+    )
+
+
+def _has_repartition(df) -> bool:
+    return "Repartition" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_feature_table_spreads_one_row_group_source(spark, sf_dir, tmp_path):
+    """A one-row-group source scans as one partition; the feature table
+    every MLlib pass reads has one per core, and the round-robin spread
+    deals the same rows to the same partitions on every build."""
+    from pyspark.ml.functions import vector_to_array
+
+    orders = _one_row_group_orders(spark, sf_dir, tmp_path)
+    n = spark.sparkContext.defaultParallelism
+    assert orders.rdd.getNumPartitions() < n
+
+    def partition_hashes(df):
+        row_hash = F.xxhash64("label", vector_to_array("features"))
+        return sorted(
+            (r[0], r[1], tuple(r[2]))
+            for r in df.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count("*").alias("n"), F.sort_array(F.collect_list(row_hash)))
+            .collect()
+        )
+
+    first, second = _features(orders), _features(orders)
+    assert first.rdd.getNumPartitions() == n
+    assert _has_repartition(first)
+    hashes = partition_hashes(first)
+    assert len(hashes) == n
+    assert sum(r[1] for r in hashes) == orders.count()
+    assert partition_hashes(second) == hashes
+
+
+def test_feature_table_keeps_enough_partitions(spark):
+    """An input with at least one partition per core, or an adaptive plan
+    whose shuffle already sizes it, gets no new exchange."""
+    n = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 200, numPartitions=n + 1).select(
+        F.col("id").cast("double").alias("label"),
+        (F.col("id") % 7).cast("double").alias("x"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("c"),
+    )
+    out = FT.build_feature_table(wide, "label", ["x", "c"])
+    assert out.rdd.getNumPartitions() == n + 1
+    assert not _has_repartition(out)
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+    shuffled = wide.groupBy("x", "c").agg(F.sum("label").alias("label"))
+    assert not _has_repartition(FT.build_feature_table(shuffled, "label", ["x", "c"]))
+
+
+def test_spread_partition_count_runs_no_job(spark, sf_dir, tmp_path):
+    """The partition check reads the count from the planned RDD and runs
+    no job. The control: reading the count of an adaptive plan does run
+    one, and the tracker sees it."""
+    from usedcars_bigdata_spark.operators.partitioning import spread_over_cores
+
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    orders = _one_row_group_orders(spark, sf_dir, tmp_path)
+    adaptive = orders.groupBy("o_orderstatus").count()
+    before = job_ids()
+    spread = spread_over_cores(orders)
+    spread_over_cores(adaptive)
+    assert job_ids() == before
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+    before = job_ids()
+    adaptive.rdd.getNumPartitions()
+    assert job_ids() != before

@@ -773,3 +773,56 @@ def test_only_run_stream_starts_streams():
     assert drains == [], drains
     assert sleeps == [], sleeps
     assert tempdirs == [("plans/registry.py", "scratch_dir")], tempdirs
+
+
+def test_memory_sink_view_is_dropped_after_read(spark, sf_dir, batch_events):
+    """ts_stream_dedup reads its memory sink through take_sink: the sink's
+    temp view is gone from the catalog, so no later session clone copies
+    it, and the returned frame still reads every row."""
+    from pyspark.sql import functions as F
+
+    from usedcars_bigdata_spark.plans import QUERIES
+
+    got = QUERIES["ts_stream_dedup"](spark, sf_dir)
+    assert not spark.catalog.tableExists("ts_stream_dedup_sink")
+    want = batch_events.select(
+        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hour_start")
+    ).distinct()
+    n = want.count()
+    assert n > 0 and len(got.toPandas()) == n
+
+
+def test_plans_read_memory_sinks_through_take_sink():
+    """Structural guard: an entry under plans/ that runs a memory-sink
+    stream reads the sink with streaming.events.take_sink, and no entry
+    there calls ``.table(...)`` on a stream sink, which would leave the
+    sink's view, and its rows, in the session catalog."""
+    import ast
+    import pathlib
+
+    import usedcars_bigdata_spark
+
+    plans = pathlib.Path(usedcars_bigdata_spark.__file__).parent / "plans"
+    unread, direct = [], []
+    for path in sorted(plans.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+            names = {ast.unparse(c.func).rsplit(".", 1)[-1] for c in calls}
+            streams = [
+                c for c in calls
+                if ast.unparse(c.func).endswith("run_stream")
+                and not any(k.arg == "foreach_batch" for k in c.keywords)
+            ]
+            where = (path.name, fn.name)
+            if streams and "take_sink" not in names:
+                unread.append(where)
+            for c in calls:
+                if not (isinstance(c.func, ast.Attribute) and c.func.attr == "table"):
+                    continue
+                arg = ast.unparse(c.args[0]).strip("'\"") if c.args else ""
+                if streams or arg == "sink" or arg.endswith("_sink"):
+                    direct.append(where)
+    assert unread == [], unread
+    assert direct == [], direct

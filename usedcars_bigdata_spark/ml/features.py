@@ -12,6 +12,8 @@ from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame
 
+from ..operators.partitioning import spread_over_cores
+
 
 def string_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
@@ -92,9 +94,19 @@ def build_feature_table(
 ) -> DataFrame:
     """End-to-end featurization: index categoricals → assemble → (label,
     features) table, the shape MLlib regressors train on
-    (price-prediction.py:178-191)."""
+    (price-prediction.py:178-191).
+
+    The table has at least ``defaultParallelism`` partitions
+    (``operators.partitioning.spread_over_cores``). Callers cache it and
+    every MLlib pass reads it again: the linear fit's aggregate, the
+    trees' split search and one job per tree level, the evaluation. The
+    reference's 1.4 GB CSV splits into many tasks per pass, but a
+    one-row-group parquet input scans as one partition, and each of
+    those passes would then run as one task on one core. A smaller
+    count is raised by one round-robin shuffle; a larger one, or an
+    adaptive plan sized by ``spark.sql.shuffle.partitions``, is kept."""
     candidates = feature_cols or [c for c in df.columns if c != label_col]
     cats = [c for c in candidates if dict(df.dtypes)[c] == "string"]
     indexed, _ = index_categoricals(df, cats)
     assembled = assemble_features(indexed, candidates)
-    return assembled.select(label_col, "features")
+    return spread_over_cores(assembled.select(label_col, "features"))

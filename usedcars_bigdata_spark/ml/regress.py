@@ -161,10 +161,11 @@ def run_model_suite(
     as a DataFrame built with an explicit schema (S4)."""
     train, test = data.randomSplit([0.8, 0.2], seed=seed)
     train = train.cache()
-    # Feature count from the assembled vector — needed so adj-R² actually
-    # applies the correction (n_features=None falls back to adj_r2 == r2).
-    first = train.select("features").first()
-    n_features = first["features"].size if first else None
+    # Feature count from the assembler's column metadata, not a job —
+    # needed so adj-R² actually applies the correction (n_features=None
+    # falls back to adj_r2 == r2).
+    ml_attr = train.schema["features"].metadata.get("ml_attr", {})
+    n_features = ml_attr.get("num_attrs")
     rows = []
     for name in model_names or list(MODEL_ZOO):
         _, m = fit_and_evaluate(

@@ -211,6 +211,26 @@ def zorder_layout(
     )
 
 
+def spread_over_cores(df: DataFrame) -> DataFrame:
+    """At least ``n = defaultParallelism`` partitions, so every pass over
+    a cached, reused table (an MLlib training loop) runs on every core.
+
+    A plan with fewer gets a round-robin ``repartition(n)``, which
+    ``spark.sql.execution.sortBeforeRepartition`` keeps deterministic.
+    A plan with ``n`` or more is returned as it is: a forced shuffle of a
+    100 TB table costs more than the passes gain. So is an adaptive plan,
+    whose shuffle ``spark.sql.shuffle.partitions`` already sizes; reading
+    its partition count would run its shuffle stages. The count of any
+    other plan comes from its planned RDD, without running a job."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
+    if df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n)
+
+
 def cache_hot(df: DataFrame) -> DataFrame:
     """MEMORY_AND_DISK persist for iterative reuse (ML training loops).
     Always pair with an eventual unpersist in long-lived jobs —

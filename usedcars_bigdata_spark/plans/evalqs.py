@@ -22,7 +22,12 @@ from ..ml import eval as ME
 from ..operators import graph as G
 from ..sources import load_table
 from .registry import query, scratch_dir
-from ..streaming.events import exact_ranges, run_stream, write_replay_source
+from ..streaming.events import (
+    exact_ranges,
+    run_stream,
+    take_sink,
+    write_replay_source,
+)
 
 # Shared synthesis: one row per order with (label, score, price_cents, fold).
 _SCORED_CTE = """
@@ -1238,7 +1243,7 @@ def ts_stream_left_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"expected >={expected} micro-batches for {n_files} files, "
         f"got {n_batches}"
     )
-    return spark.table(sink).filter(F.col("user_id") >= 0)
+    return take_sink(spark, sink).filter(F.col("user_id") >= 0)
 
 
 @query(
@@ -1898,7 +1903,7 @@ def ts_stream_rate_limit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir)
     out = streaming_token_bucket(stream, rate_per_hour=6, capacity=3)
     run_stream(out, sink)
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 @query(

@@ -29,7 +29,12 @@ from ..operators import timeseries as TS
 from ..operators import window as W
 from ..sources import load_table
 from .registry import query, scratch_dir
-from ..streaming.events import exact_ranges, run_stream, write_replay_source
+from ..streaming.events import (
+    exact_ranges,
+    run_stream,
+    take_sink,
+    write_replay_source,
+)
 
 # ---------------------------------------------------------------------------
 # Reference parity: the three benchmark queries
@@ -945,7 +950,7 @@ def ts_stream_microbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = "ts_stream_microbatch_sink"
     stream = windowed_counts(read_event_stream(spark, sf_dir))
     run_stream(stream, sink, output_mode="complete")
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 
@@ -992,7 +997,7 @@ def ts_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     out = ohlc_resample(stream, "ts", "event_type", "value", "event_id")
     run_stream(out, sink, output_mode="complete")
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 @query(
@@ -1022,7 +1027,7 @@ def ts_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys, ["user_id", "event_type", "hour_start"]
     ).select("user_id", "event_type", "hour_start")
     run_stream(deduped, sink)
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 @query(
@@ -1056,7 +1061,7 @@ def ts_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = spark.createDataFrame(EVENT_TIER_DIM, "event_type string, tier string")
     out = enrich_with_tiers(read_event_stream(spark, sf_dir), dim)
     run_stream(out, sink, output_mode="complete")
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 @query(
@@ -3261,7 +3266,7 @@ def ts_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="2 hours",
     )
     run_stream(joined, sink)
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 @query(
@@ -3310,7 +3315,7 @@ def ts_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flags = running_anomaly_flags(cents)
     run_stream(flags, sink)
-    return spark.table(sink).select(
+    return take_sink(spark, sink).select(
         "user_id",
         "event_id",
         F.col("value").alias("value_cents"),
@@ -5229,7 +5234,7 @@ def ts_stream_multibatch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_stream(stream, sink, output_mode="complete")
     n_batches = len(q.recentProgress)
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 @query(
@@ -7234,7 +7239,7 @@ def ts_stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_stream(sessions, sink, floor=8)
     n_batches = len(q.recentProgress)
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
-    return spark.table(sink)
+    return take_sink(spark, sink)
 
 
 _GEO_COORDS_CTE = """
@@ -7844,7 +7849,7 @@ def rows_stream_late_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = p if isinstance(p, dict) else json.loads(p.json)
         for op in d.get("stateOperators", []):
             dropped += op.get("numRowsDroppedByWatermark", 0)
-    out = spark.table(sink)
+    out = take_sink(spark, sink)
     late_emitted = out.filter(
         (F.col("window_start") >= cuts[0]) & (F.col("window_start") < cuts[1])
     ).count()

@@ -31,7 +31,7 @@ from ..sources import load_table
 from .evalqs import _EDGES_CTE, _copurchase_edges
 from .queries import _multibatch_events_dir
 from .registry import query
-from ..streaming.events import run_stream
+from ..streaming.events import run_stream, take_sink
 
 
 @query(
@@ -1175,7 +1175,7 @@ def ts_stream_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = run_stream(totals, sink, output_mode="complete")
     w = Window.orderBy(F.col("spend_cents").desc(), F.col("user_id").asc())
     return (
-        spark.table(sink)
+        take_sink(spark, sink)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= 20)
         .select("user_id", "n_purchases", "spend_cents")

@@ -26,7 +26,9 @@ A stream has one lifecycle:
   stop itself is bounded by ``STREAM_STOP_TIMEOUT_S``, so a hung
   foreachBatch handler cannot wedge the caller). foreachBatch sinks
   (streaming.sinks, streaming.dedup, streaming.stateful) return the same
-  terminated query.
+  terminated query;
+- ``take_sink`` reads a finished memory sink once and drops its view, so
+  the sink's rows live only as long as the frame that reads them.
 
 After its last data batch an ``availableNow`` query runs one more
 micro-batch with no input, to advance the watermark: it evicts expired
@@ -432,6 +434,21 @@ def run_stream(
             spark.conf.set(stop_key, caller_stop)
         raise TimeoutError(message)
     return q
+
+
+def take_sink(spark: SparkSession, name: str) -> DataFrame:
+    """The memory-sink table ``name`` as a frame, with its temp view
+    dropped from ``spark``'s catalog.
+
+    The returned frame is analyzed, so its plan already holds the sink's
+    rows and reads all of them without the view. A view left in the
+    catalog outlives the run: every session cloned from ``spark`` later
+    (each stream start, and through Spark's inherited active-session
+    thread-local the AQE and listener threads) copies it, and with it the
+    sink's whole ``Row[]``."""
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 def user_spend_totals(events: DataFrame, event_type: str = "purchase") -> DataFrame:
