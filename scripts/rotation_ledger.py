@@ -67,11 +67,11 @@ def load_last_verified(before_round: int | None = None) -> dict[str, int]:
     return last
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--next", type=int, default=DRIVER_WINDOW - N_PINS,
                     help="suggested next-round rotate-in count")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from usedcars_bigdata_spark.plans import CONTRACT_WINDOW_ROUND, ORACLES, QUERIES
 

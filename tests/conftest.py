@@ -36,7 +36,8 @@ def _drain_two_pass_hubs():
     turn later plan-shape/cache-count assertions into confusing
     secondary failures (r9 review finding). Draining here is a no-op
     when the registry is empty, and never touches caches tests manage
-    themselves (cache_hot and fixture-level caches stay untouched)."""
+    themselves (a test's own persist() and fixture-level caches stay
+    untouched)."""
     yield
     from usedcars_bigdata_spark.operators.window import release_hubs
 

@@ -3,11 +3,12 @@
 Round-3 post-mortem: the driver canonicalizes query outputs with a pandas
 ``sort_values`` over all columns, which raises on unhashable cells
 (list/ndarray) — `ext_embedding_quantize` shipped a raw array column and
-went red while the repo's own driver_sim reported it green, because the
-sim pre-normalized arrays before sorting. These tests pin (a) that
-driver_sim's canonicalizer now reproduces the driver's failure mode, and
-(b) the round-5 rotation actually placed the never-driver-checked entries
-inside the 50-entry sweep window.
+went red while the repo's own driver simulation reported it green, because
+it pre-normalized arrays before sorting. These tests pin (a) that the
+canonicalizer of scripts/audit.py reproduces the driver's failure mode,
+(b) the rotation placed the never-driver-checked entries inside the
+50-entry sweep window, and (c) the audit's entry selector and scan-pin
+verdict.
 """
 
 from __future__ import annotations
@@ -33,25 +34,65 @@ def _script(name):
     return mod
 
 
-def _driver_sim():
-    return _script("driver_sim")
-
-
 def test_driver_sim_canon_crashes_on_array_cells():
     """The sim's canonicalizer must fail on array cells exactly like the
     driver's (pandas sort_values → factorize → unhashable list) — this is
     the regression that let round 3's quantize failure hide."""
-    sim = _driver_sim()
+    sim = _script("audit")
     frame = pd.DataFrame({"id": [2, 1], "q": [[1, 2], [3, 4]]})
     with pytest.raises(TypeError):
         sim.canon_rows(frame)
 
 
 def test_driver_sim_canon_flat_frames_sort_consistently():
-    sim = _driver_sim()
+    sim = _script("audit")
     a = pd.DataFrame({"x": [3, 1, 2], "y": ["c", "a", "b"]})
     b = pd.DataFrame({"y": ["b", "c", "a"], "x": [2, 3, 1]})
     assert sim.canon_rows(a) == sim.canon_rows(b)
+
+
+def test_audit_selects_entries_in_contract_order():
+    audit = _script("audit")
+    names = {"ref_a": 1, "rel_b": 2, "ts_c": 3, "rel_d": 4}
+    assert audit.select(names, "all") == ["ref_a", "rel_b", "ts_c", "rel_d"]
+    assert audit.select(names, "2") == ["ref_a", "rel_b"]
+    assert audit.select(names, "0") == []
+    assert audit.select(names, "ts_,rel_") == ["rel_b", "ts_c", "rel_d"]
+    assert audit.select(names, "nosuch") == []
+
+
+def test_audit_scan_verdict_needs_a_pin_for_outside_cache_scans():
+    """A 3+-scan entry passes when pinned in tests/test_plan_shapes.py or
+    when every hot table is read only through a cache."""
+    audit = _script("audit")
+    hot = {"lineitem": (4, 2), "orders": (3, 0)}
+    cached = {"lineitem": (4, 0), "orders": (3, 0)}
+    assert audit.scan_ok("rel_pinned", hot, {"rel_pinned"})
+    assert audit.scan_ok("rel_unpinned", cached, {"rel_pinned"})
+    assert not audit.scan_ok("rel_unpinned", hot, {"rel_pinned"})
+
+
+def test_audit_scan_pins_read_the_plan_shape_budgets():
+    pins = _script("audit").scan_pins()
+    assert {"ext_vocab_saturation", "rel_pagerank_copurchase"} <= pins
+
+
+def test_audit_scan_counts_hot_and_two_scan_tables():
+    audit = _script("audit")
+    scan = "Scan parquet [a#1] Location: InMemoryFileIndex[file:/d/{}.parquet]"
+    plan = "\n".join([
+        "Union",
+        ":- " + scan.format("lineitem"),
+        ":- InMemoryTableScan [a#1]",
+        ":     +- InMemoryRelation [a#1]",
+        ":           +- " + scan.format("lineitem"),
+        ":- " + scan.format("lineitem"),
+        ":- " + scan.format("orders"),
+        "+- " + scan.format("orders"),
+    ])
+    hot, two = audit.scan_counts(plan, ["lineitem", "orders", "part"])
+    assert hot == {"lineitem": (3, 2)}
+    assert two == {"orders": 2}
 
 
 def test_rotation_window_satisfies_ledger_policy():

@@ -382,13 +382,6 @@ def test_partitioning_ops(spark, sf_dir, tmp_path):
     from usedcars_bigdata_spark.operators import partitioning as P
 
     orders = load_table(spark, sf_dir, "orders")
-    rp = P.repartition_by(orders, 8, "o_custkey")
-    assert rp.rdd.getNumPartitions() == 8
-    assert P.coalesce_to(rp, 2).rdd.getNumPartitions() == 2
-    rr = P.repartition_range(orders, 4, "o_orderdate")
-    assert rr.rdd.getNumPartitions() == 4
-    assert rr.count() == orders.count()
-
     s = P.salted(orders, "o_custkey", 16)
     vals = [r["__salt"] for r in s.select("__salt").distinct().collect()]
     assert all(0 <= v < 16 for v in vals)

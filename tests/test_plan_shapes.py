@@ -28,9 +28,9 @@ def test_no_data_sized_single_partition_funnels(spark, sf_dir):
     supplier / order-key axes). Pin them: any Exchange SinglePartition
     in these plans may feed only a scalar aggregate or a bucket-offset
     table (line mentions __b), never a Sort/Window over the data axis.
-    The full-registry sweep lives in scripts/audit_single_partition.py
-    (run per round; exits 1 on an undeclared site); both use the shared
-    walk in usedcars_bigdata_spark.plantools."""
+    The full-registry sweep lives in scripts/audit.py (run per round;
+    exits 1 on an undeclared site); both use the shared walk in
+    usedcars_bigdata_spark.plantools."""
     from usedcars_bigdata_spark.operators.window import release_hubs
     from usedcars_bigdata_spark.plantools import single_partition_funnel_sites
 
@@ -896,7 +896,7 @@ def test_quantile_normalize_scans_corpus_twice(spark, sf_dir):
         # routing it through the text-carrying shingle hub. Raw budget 3
         # because this test counts plan LINES and the lazy persist hub
         # re-prints its cached subtree per consumer (the InMemoryRelation
-        # phantom); scripts/scan_audit.py's outside-cache view shows
+        # phantom); scripts/audit.py's outside-cache view shows
         # 3 raw / 1 outside-cache — the narrow id leg is the only real
         # I/O beyond the hub fill.
         ("ext_vocab_saturation", "documents", 3),

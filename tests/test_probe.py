@@ -124,8 +124,8 @@ def _dotted(func) -> str:
 def test_probes_live_in_one_script():
     """No probe_*.py / scale_probe*.py script besides probe.py, and no
     script but probe.py and bench_isolated.py runs a child in a loop and
-    reads its JSON back. round_close.py and bench_compare.py start
-    children too, but read no JSON inside a loop."""
+    reads its JSON back. bench_compare.py starts children too, but reads
+    no JSON inside a loop."""
     names = {p.name for p in SCRIPTS.glob("*.py")}
     strays = {
         n for n in names
@@ -143,3 +143,24 @@ def test_probes_live_in_one_script():
             if calls & SUBPROCESS and "json.loads" in calls:
                 offenders.append(f"{path.name}:{loop.lineno}")
     assert not offenders, f"child-JVM loops outside scripts/probe.py: {offenders}"
+
+
+def test_no_script_puts_a_literal_path_on_sys_path():
+    """Scripts derive the repo root from ``__file__``: a literal path in
+    ``sys.path`` makes a script run from another checkout import that
+    path's code instead of its own."""
+    offenders = []
+    for path in sorted(SCRIPTS.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(
+                    isinstance(a, ast.Constant) and isinstance(a.value, str)
+                    for a in node.args
+                )
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, f"literal sys.path entries: {offenders}"

@@ -19,8 +19,8 @@ def _drain_hubs(spark):
     two-pass window operators and plan-level hubs persist() frames the
     CacheManager holds for the life of the JVM — a 408-entry pytest
     session would accumulate them into the storage region (the r7
-    heap-pressure failure mode). bench.py and driver_sim drain per
-    entry; this fixture gives the full-registry sweep the same
+    heap-pressure failure mode). bench.py and scripts/audit.py drain
+    per entry; this fixture gives the full-registry sweep the same
     protocol."""
     yield
     from usedcars_bigdata_spark.operators.window import release_hubs

@@ -534,7 +534,7 @@ def minhash_near_dupes(
     verification ever dominates. The shingle persist is REGISTERED in the
     hub registry (window.register_hub): call release_hubs() once the
     returned pairs are materialized — the harnesses (bench.py,
-    driver_sim, the test drain fixture) already do."""
+    scripts/audit.py, the test drain fixture) already do."""
     sh = register_hub(
         word_shingles(df, id_col, text_col, n=n, hashed=True).persist()
     )

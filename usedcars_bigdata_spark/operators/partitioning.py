@@ -14,26 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def repartition_by(df: DataFrame, n: int | None, *cols: str) -> DataFrame:
-    """Hash-partition on join/agg keys (one shuffle now, co-located
-    downstream ops later). Worth it when ≥2 subsequent wide ops reuse the
-    same key; otherwise let AQE place the single exchange."""
-    if n is None:
-        return df.repartition(*[F.col(c) for c in cols])
-    return df.repartition(n, *[F.col(c) for c in cols])
-
-
-def repartition_range(df: DataFrame, n: int, *cols: str) -> DataFrame:
-    """Range-partition (sorted-output friendly; feeds sort-based writes)."""
-    return df.repartitionByRange(n, *[F.col(c) for c in cols])
-
-
-def coalesce_to(df: DataFrame, n: int) -> DataFrame:
-    """Reduce partition count WITHOUT a shuffle — for small outputs /
-    pre-write compaction. Never use to grow parallelism."""
-    return df.coalesce(n)
-
-
 def salted(df: DataFrame, key: str, salt_buckets: int, salt_col: str = "__salt") -> DataFrame:
     """Append a deterministic salt derived from the whole row hash to break
     a hot key across ``salt_buckets`` reducers. Pair with exploding the
@@ -229,15 +209,6 @@ def spread_over_cores(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
-
-
-def cache_hot(df: DataFrame) -> DataFrame:
-    """MEMORY_AND_DISK persist for iterative reuse (ML training loops).
-    Always pair with an eventual unpersist in long-lived jobs —
-    deliberately NOT routed through window.register_hub: a training
-    loop's cache must survive the per-entry release_hubs() drain that
-    the harnesses run between queries."""
-    return df.persist()
 
 
 def zonemap_prune_audit(

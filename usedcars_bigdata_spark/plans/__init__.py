@@ -21,7 +21,7 @@ from . import statsq as _statsq  # noqa: E402,F401
 # round 10's 50/50-green sweep the backlog stood at 55; this window takes
 # 38 (-> 17 remaining), round 12 takes the rest and empties the backlog.
 # Every rotated-out entry keeps pytest + full-registry dtype-checked
-# driver_sim coverage meanwhile.
+# scripts/audit.py coverage meanwhile.
 #
 # CONTRACT_WINDOW_ROUND is the round the current window was queued for. The
 # rotation ledger checks the window against the driver rows of the rounds
@@ -95,7 +95,7 @@ _CONTRACT_PRIORITY = [
     "rel_bucketed_counts",  # re-verify (last r2)
     # --- driver's 50-entry sweep window ends here ---
     # Remaining entries keep their prior relative order; all retain
-    # pytest + full-registry driver_sim replay coverage between
+    # pytest + full-registry scripts/audit.py replay coverage between
     # official driver rows.
     "rel_rollup_year_priority",
     "rel_pivot_status",

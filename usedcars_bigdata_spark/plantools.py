@@ -1,7 +1,7 @@
 """Executed-plan tree introspection shared by the scale audits.
 
-Three consumers used to carry private copies of this walk
-(scripts/audit_single_partition.py and two tests in
+Three consumers used to carry private copies of this walk (the
+registry audit, now scripts/audit.py, and two tests in
 tests/test_plan_shapes.py — r9 review finding): a fix to one copy would
 not propagate, letting the audit script and the pinned plan-shape tests
 silently disagree about what counts as a data-sized funnel. The printed

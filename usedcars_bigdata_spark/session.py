@@ -63,9 +63,7 @@ def get_session(
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-        )
+        shuffle_partitions = max(cpus, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)
